@@ -1,13 +1,11 @@
 #!/usr/bin/env python
-"""Optimization-round instrumentation (guide §1): stage-level noop-sink
-isolation for the flagship pipeline + per-query timing/plan capture.
+"""Per-query timing and plan capture for the declared driver queries.
 
 NOT part of the frozen measurement surface — bench.py stays the
-driver's protocol. This file exists so OPTIMIZATION_r07.md can cite
-where the seconds actually go.
+measurement protocol. Per-stage pipeline timings come from
+``perfbench/run.py --trace 1``, which reads them from Spark's event log.
 
 Usage:
-  python bench_extra.py stages          # pipeline stage breakdown @1M docs
   python bench_extra.py queries [name…] # headline queries: 3 runs each
   python bench_extra.py plans out_dir [name…]  # explain("formatted") dumps
 """
@@ -16,9 +14,7 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 
@@ -34,105 +30,6 @@ def _noop(df) -> float:
     t0 = time.perf_counter()
     df.write.format("noop").mode("overwrite").save()
     return time.perf_counter() - t0
-
-
-def stages() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    mult = int(os.environ.get("PIE_BENCH_MULT", "200"))
-    tmp = tempfile.mkdtemp(prefix="pie_bench_extra_")
-    docs_path = os.path.join(tmp, "docs.parquet")
-    out: dict[str, float] = {}
-    try:
-        spark = _mk("pie-bench-extra-gen")
-        from pie_spark.fixtures.gen import interleaved_docs
-
-        interleaved_docs(spark, sf_dir, mult=mult, parts=128 if mult > 1 else 0) \
-            .write.mode("overwrite").parquet(docs_path)
-        spark.stop()
-
-        spark = _mk("pie-bench-extra-stages")
-        sc = spark.sparkContext
-        from pyspark.storagelevel import StorageLevel
-
-        from pie_spark.canon.canonical import key_canonical_map
-        from pie_spark.canon.cc import adaptive_components
-        from pie_spark.canon.edges import build_edges
-        from pie_spark.config import PipelineConfig
-        from pie_spark.extract.fused import fused_matches
-        from pie_spark.extract.merge import merge_mentions
-        from pie_spark.extract.spans import explode_spans, media_spans, text_spans
-        from pie_spark.fixtures.gen import entity_dict_df
-        from pie_spark.graph.triples import _with_canon, all_triples
-        from pie_spark.link.linker import link_mentions
-        from pie_spark.pipeline import run, try_collect_surfaces
-        from pie_spark.schemas import DOC_SCHEMA
-
-        cfg = PipelineConfig()
-        docs = spark.read.schema(DOC_SCHEMA).parquet(docs_path)
-        dict_df = entity_dict_df(spark)
-
-        # warmup: one full pipeline run (JIT, codegen, Arrow init)
-        sc.setJobDescription("warmup full pipeline")
-        res = run(spark, cfg, docs, dict_df)
-        res.triples.count()
-        res.unpersist()
-
-        sc.setJobDescription("stage: scan+explode+filter (no python)")
-        txt = text_spans(explode_spans(docs))
-        out["scan_explode_filter"] = _noop(txt)
-
-        sc.setJobDescription("stage: + fused detector (Arrow)")
-        surfaces = try_collect_surfaces(dict_df, cfg.dict_max_surfaces)
-        fused = fused_matches(txt, spark, surfaces,
-                              enable_phone=cfg.enable_phone, enable_crf=cfg.enable_crf)
-        out["fused_detector"] = _noop(fused)
-
-        sc.setJobDescription("stage: + merge windows")
-        merged_plain = merge_mentions(fused)
-        out["merge_mentions"] = _noop(merged_plain)
-
-        sc.setJobDescription("stage: extract+merge persisted (as pipeline does)")
-        t0 = time.perf_counter()
-        merged = merge_mentions(fused).persist(StorageLevel.MEMORY_AND_DISK)
-        merged.count()
-        out["extract_merge_persist"] = time.perf_counter() - t0
-
-        sc.setJobDescription("stage: linking (over persisted mentions)")
-        linked = link_mentions(merged, dict_df)
-        out["linking"] = _noop(linked)
-
-        sc.setJobDescription("stage: CC canonicalization (dict graph)")
-        t0 = time.perf_counter()
-        labels = adaptive_components(
-            spark, build_edges(dict_df), salt_k=cfg.salt_k,
-            max_iters=cfg.cc_max_iters, driver_max_edges=cfg.cc_driver_max_edges,
-        )
-        key_map = key_canonical_map(labels)
-        key_map.count()
-        out["cc_keymap"] = time.perf_counter() - t0
-
-        sc.setJobDescription("stage: canon attach + triples + dedup")
-        spans = explode_spans(docs)
-        med = media_spans(spans)
-        linked_canon = _with_canon(linked, key_map)
-        out["triples_from_persisted"] = _noop(
-            all_triples(med, linked_canon, merged, cfg.pii_types)
-        )
-
-        merged.unpersist()
-
-        sc.setJobDescription("full pipeline (bench protocol)")
-        t0 = time.perf_counter()
-        res = run(spark, cfg, docs, dict_df)
-        n = res.triples.count()
-        out["full_pipeline"] = time.perf_counter() - t0
-        out["triples"] = n
-        res.unpersist()
-        spark.stop()
-        print(json.dumps({k: (round(v, 3) if isinstance(v, float) else v)
-                          for k, v in out.items()}))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def queries(names: list[str]) -> None:
@@ -189,10 +86,8 @@ def plans(out_dir: str, names: list[str]) -> None:
 
 
 if __name__ == "__main__":
-    cmd = sys.argv[1] if len(sys.argv) > 1 else "stages"
-    if cmd == "stages":
-        stages()
-    elif cmd == "queries":
+    cmd = sys.argv[1] if len(sys.argv) > 1 else "queries"
+    if cmd == "queries":
         queries(sys.argv[2:])
     elif cmd == "plans":
         plans(sys.argv[2], sys.argv[3:])

@@ -27,33 +27,19 @@ class PipelineConfig:
     # --- feature flags -----------------------------------------------------
     enable_crf: bool = True    # BiLSTM-CRF-style tagger (SURVEY.md §2.4)
     enable_phone: bool = True  # PHONE matcher (inferred PII type, §2.3)
-    fuse_detectors: bool = True  # regex+gazetteer+CRF in ONE Arrow pass
     # --- mention types emitted as HAS_* triples ---------------------------
     pii_types: tuple[str, ...] = ("EMAIL", "SSN", "PHONE", "ADDRESS")
     # the gazetteer is broadcast-small by spec (BASELINE.json:6); this
     # cap guards the driver-side surface collect against a dictionary
-    # that is NOT — past it the pipeline degrades to the shuffle-join
+    # that is NOT — past it the pipeline degrades to the dictionary-shard
     # gazetteer + non-broadcast salted linking (extract_stage /
-    # gazetteer_join.py) instead of OOMing the driver mid-broadcast.
+    # gazetteer_shard.py) instead of OOMing the driver mid-broadcast.
     dict_max_surfaces: int = 5_000_000
-    # which dictionary-scale matcher the fallback uses (VERDICT r05
-    # next#1): "shard" = dictionary-shard trie probes (gazetteer_shard
-    # .py — exact automaton parity, fastest measured wall, text
-    # shuffles ~1.3× on the bench corpus), "join" = candidate-core
-    # equi-join (gazetteer_join.py — minimal shuffle, zero text
-    # replication, token-aligned coverage contract; for network-bound
-    # deployments)
-    fallback_matcher: str = "shard"
-    # dictionary-shard replication of the shard matcher: bounds cogroup
-    # group memory and spreads hot key chars; any value is
+    # dictionary-shard replication of the fallback matcher: bounds
+    # cogroup group memory and spreads hot key chars; any value is
     # hit-identical. Raise with corpus size (group ≈ docs_with_char /
     # shard_salt_parts).
     shard_salt_parts: int = 8
-    # known-hot gazetteer surfaces for the join-fallback path (e.g. from
-    # a prior run's A4 top-k or the streaming hot-key counters); salted
-    # salt_k ways in the candidate⋈dictionary join. Empty → plain join
-    # with AQE skew-join as the backstop.
-    hot_surfaces: tuple[str, ...] = ()
     # pre-computed hot norm_keys for J6/CC salting (VERDICT r05 next#7:
     # the streaming counters' hot_keys_from_counts output, via the CLI's
     # --hot-keys-from). Non-empty → downstream_stage SKIPS the batch A4

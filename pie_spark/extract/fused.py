@@ -1,20 +1,20 @@
 """Fused detector stage: regex + gazetteer + CRF in ONE Arrow pass
 (SURVEY.md §2.3 M5 "batched multi-pattern matcher", taken to its
-logical conclusion).
+logical conclusion) — the pipeline's only mention-detection entry
+point.
 
-The three detectors (pie_spark/extract/{matchers,gazetteer,tagger}.py)
-are each correct standalone operators, but running them as separate
-pandas-UDF stages costs three scans of the span table and three
-JVM→Python Arrow round trips over the same text. This module fuses all
-three pure-Python cores into a single Iterator pandas UDF: one scan,
-one Arrow transfer, one Python stage in the physical plan
-(`ArrowEvalPython` ×1 instead of ×3), emitting every mention with its
-`detector` tag so the downstream overlap-merge (T3/W3) is unchanged
-and bit-identical.
+The three detector cores (pie_spark/extract/{matchers,gazetteer,tagger}
+.py: ``find_matches``, ``find_gazetteer_matches``, ``tag_texts``) are
+pure Python; this module runs all three inside a single Iterator pandas
+UDF: one scan of the span table, one JVM→Python Arrow transfer, one
+Python stage in the physical plan (`ArrowEvalPython` ×1), emitting
+every mention with its `detector` tag so the downstream overlap-merge
+(T3/W3) sees one mention set. Callers that need a subset pass
+``surfaces=[]`` (no gazetteer hits) and/or ``enable_crf=False``.
 
-At the 10^12-doc design point this third-to-one reduction applies to
-the single most expensive stage of the whole pipeline (the only one
-that leaves the JVM), so it is roughly a 3× cut of total CPU per doc.
+At the 10^12-doc design point this is the single most expensive stage
+of the whole pipeline (the only one that leaves the JVM), so the
+detectors share its one scan and one Arrow round trip.
 """
 
 from __future__ import annotations
@@ -32,8 +32,8 @@ from pie_spark.extract.gazetteer import _AC_CACHE, AhoCorasick, find_gazetteer_m
 from pie_spark.extract.matchers import find_matches
 from pie_spark.extract.tagger import tag_text, tag_texts
 
-# MATCH_STRUCT + detector tag (schemas.MATCH_STRUCT stays the binding
-# shape for the standalone detectors)
+# UDF return element: one detected mention within one span text, with
+# the detector that found it
 FUSED_MATCH_STRUCT = T.ArrayType(
     T.StructType(
         [
@@ -119,9 +119,8 @@ def fused_matches(
     enable_phone: bool = True,
     enable_crf: bool = True,
 ) -> DataFrame:
-    """One-pass detection over exploded text spans → MENTION_SCHEMA rows
-    (same shape as each standalone detector, `detector` ∈
-    {regex, gazetteer, crf}).
+    """One-pass detection over exploded text spans → MENTION_SCHEMA rows,
+    `detector` ∈ {regex, gazetteer, crf}.
 
     r07: spans whose text cannot contain any mention (pure ``[a-z ]`` —
     41.8% of the bench corpus) are dropped by a codegen'd rlike BEFORE

@@ -2,14 +2,14 @@
 
 Pure-Python Aho-Corasick automaton (no external deps) built **once per
 Python worker** from the broadcast surface list, then streamed over
-Arrow batches via an Iterator pandas UDF — the standard broadcast-
-dictionary pattern from the spec (BASELINE.json:6 "broadcast
-dictionary").
+Arrow batches by the fused detector UDF (extract/fused.py) — the
+standard broadcast-dictionary pattern from the spec (BASELINE.json:6
+"broadcast dictionary").
 
 Scale notes:
   * the automaton build is O(total surface chars) and happens once per
-    executor Python worker per stage, not per row/batch (module-level
-    cache keyed by broadcast id).
+    executor Python worker, not per row/batch (module-level cache keyed
+    by a content hash of the surface list).
   * matches are emitted for *all* dictionary hits incl. overlaps;
     overlap resolution is the merge operator's job (T3/W3) so priority
     rules live in exactly one place.
@@ -20,16 +20,7 @@ Scale notes:
 from __future__ import annotations
 
 import re
-import zlib
 from collections import deque
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-
-from pie_spark.schemas import MATCH_STRUCT
 
 
 class AhoCorasick:
@@ -114,55 +105,5 @@ def find_gazetteer_matches(text: str, ac: AhoCorasick) -> list[dict]:
     return out
 
 
-# per-worker automaton cache: {broadcast_id: AhoCorasick}
+# per-worker automaton cache: {crc32 of the surface list: AhoCorasick}
 _AC_CACHE: dict[int, AhoCorasick] = {}
-
-
-def gazetteer_matches(
-    text_spans: DataFrame, spark: SparkSession, surfaces: list[str]
-) -> DataFrame:
-    """Gazetteer mentions over exploded text spans → MENTION_SCHEMA rows
-    with detector='gazetteer'. ``surfaces`` is the (small) distinct
-    dictionary surface list, shipped once per executor via
-    ``sc.broadcast`` — never per task."""
-    surf_list = sorted(set(surfaces))
-    bc = spark.sparkContext.broadcast(surf_list)
-    # cache key: content hash computed driver-side (PySpark 4 Broadcast
-    # exposes no id); same dictionary → same automaton, reused across
-    # stages within a worker process
-    cache_key = zlib.crc32("\x00".join(surf_list).encode())
-
-    @pandas_udf(MATCH_STRUCT)
-    def matcher(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        ac = _AC_CACHE.get(cache_key)
-        if ac is None:
-            ac = AhoCorasick(bc.value)
-            _AC_CACHE[cache_key] = ac
-        for texts in batches:
-            yield pd.Series(
-                [find_gazetteer_matches(t, ac) if t is not None else [] for t in texts]
-            )
-
-    with_m = text_spans.select(
-        "doc_id", "span_idx", "offset", matcher("text").alias("ms")
-    )
-    return with_m.select(
-        "doc_id",
-        "span_idx",
-        F.col("offset").alias("span_offset"),
-        # explode_outer + null filter instead of plain explode:
-        # Catalyst infers a size(ms)>0 filter below a non-outer
-        # Generate and pushes it under the projection, which would
-        # evaluate the (expensive) Python UDF TWICE per span.
-        F.explode_outer("ms").alias("m"),
-    ).filter(F.col("m").isNotNull()).select(
-        "doc_id",
-        "span_idx",
-        "span_offset",
-        F.col("m.start").alias("start"),
-        F.col("m.end").alias("end"),
-        F.col("m.mention_type").alias("mention_type"),
-        F.col("m.surface").alias("surface"),
-        F.lit("gazetteer").alias("detector"),
-        F.col("m.score").alias("score"),
-    )

@@ -1,11 +1,12 @@
-"""M6 at dictionary scale, path 2: dictionary-shard window probes
-(SURVEY.md §2.3 M6 fallback; VERDICT r05 next#1).
+"""M6 at dictionary scale: dictionary-shard window probes (SURVEY.md
+§2.3 M6 fallback; VERDICT r05 next#1).
 
-The expression-join fallback (gazetteer_join.py) bottoms out at ~6× the
-broadcast automaton's wall at 1M docs — the residual cost is per-token
-candidate-expression work Catalyst cannot make cheaper (VERDICT r05
-what's-wrong#1: "the next lever is algorithmic"). This module changes
-the algorithm, in two Arrow stages:
+When the dictionary is too large to broadcast, the in-UDF Aho-Corasick
+automaton cannot be built, so ``extract_stage`` routes the gazetteer
+through this module instead. Per-token candidate generation joined
+against the dictionary in Catalyst cost ~4× this path's wall at 1M docs
+for identical hits (BENCH_r07); the cost is per-token expression work,
+so this module changes the algorithm instead, in two Arrow stages:
 
   1. **Candidate pass** (mapInPandas, ONE pass over the text, never
      replicated): a compiled-regex scan (C speed) finds every
@@ -24,9 +25,8 @@ the algorithm, in two Arrow stages:
      non-alnum flank. The dictionary never touches the driver and
      never broadcasts.
 
-Exactness (stronger than the join path): the hit set equals the
-broadcast automaton's EXACTLY, including non-token-aligned occurrences
-the join path's coverage contract excludes (``aa-Whitfield-bb``).
+Exactness: the hit set equals the broadcast automaton's EXACTLY,
+including non-token-aligned occurrences (``aa-Whitfield-bb``).
 Proof sketch, both directions:
   * automaton hit ⊆ shard hit: an AhoCorasick+_boundary_ok hit of
     surface ``p`` at position ``s`` requires ``s == 0`` or
@@ -60,13 +60,10 @@ Scale shape (what shuffles at 10^12 docs):
   * text: scanned once, in place, by the candidate pass — zero
     replication, zero shuffle of span text. Spans with no alphabet
     char at any boundary emit nothing (the distributed analogue of
-    the automaton's C-speed prefilter). The expression-join path
-    (gazetteer_join.py) is retained as the all-JVM alternative for
-    Arrow-hostile deployments; pipeline default is this one (faster
-    measured wall; see BENCH/BASELINE.md r06).
-  * the large-alphabet guard (gazetteer_join.FIRST_CHAR_PREFILTER_MAX,
-    shared): past 128 distinct first chars (CJK gazetteers) the shard
-    key becomes ``pmod(hash(first_char), HASH_BUCKETS)`` on the
+    the automaton's C-speed prefilter).
+  * the large-alphabet guard (``FIRST_CHAR_PREFILTER_MAX``): past 128
+    distinct first chars (CJK gazetteers) the shard key becomes
+    ``pmod(hash(first_char), HASH_BUCKETS)`` on the
     dictionary side, computed JVM-side on the candidate's emitted
     char too (no Python reimplementation of Murmur3), and the
     candidate pass emits a window at EVERY boundary position with the
@@ -79,8 +76,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pie_spark.extract.gazetteer_join import FIRST_CHAR_PREFILTER_MAX
 from pie_spark.schemas import MENTION_SCHEMA
+
+# per-first-char shards up to this many distinct first chars (Latin-script
+# person names: ~52); past it (e.g. a CJK-surname dictionary: thousands)
+# the shard key becomes a hash bucket of the char and the candidate pass
+# emits a window at every boundary position
+FIRST_CHAR_PREFILTER_MAX = 128
 
 # shard count in the large-alphabet (hash-bucket) regime
 HASH_BUCKETS = 64

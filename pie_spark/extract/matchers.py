@@ -5,31 +5,24 @@ standard PII set, flag-gated) — BASELINE.json:6.
 
 Design for scale:
   * a single combined alternation regex ⇒ one scan per text for all
-    types (M5 "batched multi-pattern matcher"): one Arrow round trip,
-    one Python stage in the physical plan.
-  * ``pandas_udf`` in Iterator[pd.Series] → Iterator[pd.Series] form so
-    the compiled regex is reused across batches within a task
-    (input_hint: vectorized pandas/Arrow UDFs, no per-row Python).
+    types (M5 "batched multi-pattern matcher"); the compiled regex is a
+    module constant, reused across every Arrow batch of the fused
+    detector UDF (extract/fused.py).
   * validity filters are pure post-checks (no extra scans): SSN area
     000/666/9xx rejected; emails immediately preceded by ``/ : @``
     rejected (URL/userinfo contexts — adversarial negatives in the
     fixture corpus).
 
-The pure function :func:`find_matches` is the unit-testable core; the
-UDF is a thin Arrow shell around it.
+The pure function :func:`find_matches` is the unit-testable core that
+the fused detector calls per span text.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-
-from pie_spark.schemas import MATCH_STRUCT
 
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 SSN_RE = r"\b\d{3}-\d{2}-\d{4}\b"
@@ -92,50 +85,11 @@ def find_matches(text: str, enable_phone: bool = True) -> list[dict]:
     return out
 
 
-def regex_matches(text_spans: DataFrame, enable_phone: bool = True) -> DataFrame:
-    """M5 over exploded text spans → mention rows.
-
-    Input: (doc_id, span_idx, offset, text); output MENTION_SCHEMA rows
-    with detector='regex'.
-    """
-
-    @pandas_udf(MATCH_STRUCT)
-    def matcher(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for texts in batches:
-            yield pd.Series(
-                [find_matches(t, enable_phone) if t is not None else [] for t in texts]
-            )
-
-    with_m = text_spans.select(
-        "doc_id", "span_idx", "offset", matcher("text").alias("ms")
-    )
-    return with_m.select(
-        "doc_id",
-        "span_idx",
-        F.col("offset").alias("span_offset"),
-        # explode_outer + null filter instead of plain explode:
-        # Catalyst infers a size(ms)>0 filter below a non-outer
-        # Generate and pushes it under the projection, which would
-        # evaluate the (expensive) Python UDF TWICE per span.
-        F.explode_outer("ms").alias("m"),
-    ).filter(F.col("m").isNotNull()).select(
-        "doc_id",
-        "span_idx",
-        "span_offset",
-        F.col("m.start").alias("start"),
-        F.col("m.end").alias("end"),
-        F.col("m.mention_type").alias("mention_type"),
-        F.col("m.surface").alias("surface"),
-        F.lit("regex").alias("detector"),
-        F.col("m.score").alias("score"),
-    )
-
-
 def email_matches_native(text_spans: DataFrame) -> DataFrame:
     """M1 native fast path: EMAIL-only extraction with zero Python —
     ``regexp_extract_all`` stays inside WholeStageCodegen. Used by the
     oracle-checked query surface (offsets not needed there); the full
-    pipeline uses :func:`regex_matches` for offsets."""
+    pipeline gets offsets from the fused detector (extract/fused.py)."""
     return (
         text_spans.select(
             "doc_id",

@@ -50,11 +50,12 @@ def media_spans(spans: DataFrame) -> DataFrame:
 def media_refs(docs: DataFrame) -> DataFrame:
     """(doc_id, media_ref) only — the exact input HAS_MEDIA triples need.
 
-    Uses plain ``explode`` (not ``posexplode``): Spark's nested schema
-    pruning handles Explode but NOT PosExplode, so this shape prunes the
-    parquet ReadSchema to ``spans.kind``/``spans.media_ref`` — the heavy
-    ``spans.text`` payload is never re-read on the media branch (r07;
-    verified in plans/r07). Row multiset equals
+    Uses plain ``explode`` (not ``posexplode``) and drops the position:
+    the media branch needs no span index. The parquet ReadSchema is NOT
+    pruned — ``explain()`` still lists the whole ``spans`` struct
+    including ``spans.text``, because nested schema pruning does not
+    reach through the array explode; the text payload is dropped right
+    after the Generate. Row multiset equals
     ``media_spans(explode_spans(docs)).select("doc_id", "media_ref")``.
     """
     return (

@@ -12,9 +12,10 @@ bit-identical output across runs / partitionings / cluster sizes /
 ENGINES, which the P/R gate, the resume test, and the DuckDB Viterbi
 oracle (extract/tagger_sql.py) require (SURVEY.md §5.4, §7.3 item 2).
 
-Execution: Iterator-style pandas UDF (one Arrow round trip per batch;
-weights + lexicons are module constants materialized once per Python
-worker — nothing per-row, nothing per-batch).
+Execution: :func:`tag_texts` decodes one whole Arrow batch of the fused
+detector UDF (extract/fused.py) at a time; weights + lexicons are
+module constants materialized once per Python worker — nothing
+per-row, nothing per-batch.
 
 Role in the pipeline: PERSON/ADDRESS generalization beyond the exact
 gazetteer (e.g. capitalized name-shaped bigrams unseen in the
@@ -26,16 +27,10 @@ generalization can't hurt triple precision.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from pie_spark.fixtures import gazetteer as gz
-from pie_spark.schemas import MATCH_STRUCT
 
 TAGS = ["O", "B-PER", "I-PER", "B-ADDR", "I-ADDR"]
 O, BPER, IPER, BADDR, IADDR = range(5)
@@ -447,36 +442,3 @@ def tag_texts(texts: list[str]) -> list[list[dict]]:
         chunk.append(i)
     flush()
     return out
-
-
-def crf_matches(text_spans: DataFrame) -> DataFrame:
-    """CRF mentions over exploded text spans (detector='crf')."""
-
-    @pandas_udf(MATCH_STRUCT)
-    def tagger(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for texts in batches:
-            yield pd.Series([tag_text(t) if t is not None else [] for t in texts])
-
-    with_m = text_spans.select(
-        "doc_id", "span_idx", "offset", tagger("text").alias("ms")
-    )
-    return with_m.select(
-        "doc_id",
-        "span_idx",
-        F.col("offset").alias("span_offset"),
-        # explode_outer + null filter instead of plain explode:
-        # Catalyst infers a size(ms)>0 filter below a non-outer
-        # Generate and pushes it under the projection, which would
-        # evaluate the (expensive) Python UDF TWICE per span.
-        F.explode_outer("ms").alias("m"),
-    ).filter(F.col("m").isNotNull()).select(
-        "doc_id",
-        "span_idx",
-        "span_offset",
-        F.col("m.start").alias("start"),
-        F.col("m.end").alias("end"),
-        F.col("m.mention_type").alias("mention_type"),
-        F.col("m.surface").alias("surface"),
-        F.lit("crf").alias("detector"),
-        F.col("m.score").alias("score"),
-    )

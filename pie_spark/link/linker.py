@@ -7,13 +7,15 @@ key — the dictionary is the known-small side, so we never let the
 planner consider a shuffle join for it. Scoring (J2) is pure native
 column arithmetic (exact-match + token-set Jaccard + popularity prior).
 
-Top-1 per mention (W1) is a ``min_by`` **hash aggregation** keyed by
-the total-order struct (-score, entity_id) — not a row_number window:
-a window over mention_id (cardinality = every mention in the corpus)
-would shuffle-and-sort the whole mention set, while min_by gets
-map-side partial aggregation and never sorts. Deterministic under any
-partitioning (SURVEY.md §5.4): min of (-score asc, entity_id asc) ≡
-(score desc, entity_id asc).
+Top-1 per mention (W1) is a ``min_by`` aggregation keyed by the
+total-order struct (-score, entity_id) — not a row_number window. The
+struct-valued buffer rules out a hash aggregate, so the shipped plan is
+a partial + final **SortAggregate** over a per-partition Sort on
+(doc_id, span_idx, mention_id); the group key is a superset of the
+merge's hash(doc_id) partitioning, so there is no Exchange between the
+candidates and the election. Deterministic under any partitioning
+(SURVEY.md §5.4): min of (-score asc, entity_id asc) ≡ (score desc,
+entity_id asc).
 """
 
 from __future__ import annotations

@@ -31,11 +31,9 @@ from pie_spark.canon.cc import adaptive_components
 from pie_spark.canon.edges import build_edges
 from pie_spark.config import PipelineConfig
 from pie_spark.extract.fused import fused_matches
-from pie_spark.extract.gazetteer import gazetteer_matches
-from pie_spark.extract.matchers import regex_matches
+from pie_spark.extract.gazetteer_shard import gazetteer_shard_matches
 from pie_spark.extract.merge import merge_mentions
 from pie_spark.extract.spans import explode_spans, media_refs, text_spans
-from pie_spark.extract.tagger import crf_matches
 from pie_spark.graph.triples import _with_canon, all_triples
 from pie_spark.link.linker import link_mentions
 from pie_spark.link.stats import hot_keys, surface_frequencies
@@ -44,7 +42,7 @@ from pie_spark.link.stats import hot_keys, surface_frequencies
 def try_collect_surfaces(dict_df: DataFrame, max_surfaces: int) -> list[str] | None:
     """Distinct gazetteer surfaces for the in-UDF Aho-Corasick broadcast,
     or ``None`` when the dictionary is over the cap (→ the caller
-    switches to the shuffle-join gazetteer + non-broadcast linking).
+    switches to the dictionary-shard gazetteer + non-broadcast linking).
 
     The dictionary is broadcast-small by spec, but an unbounded collect
     would OOM the driver on a pathological input — so the collect is ONE
@@ -55,21 +53,6 @@ def try_collect_surfaces(dict_df: DataFrame, max_surfaces: int) -> list[str] | N
     if tbl.num_rows > max_surfaces:
         return None
     return tbl.column("surface").to_pylist()
-
-
-def collect_surfaces(dict_df: DataFrame, max_surfaces: int) -> list[str]:
-    """Strict variant of :func:`try_collect_surfaces` for callers that
-    REQUIRE the broadcast path: raises instead of degrading."""
-    surfaces = try_collect_surfaces(dict_df, max_surfaces)
-    if surfaces is None:
-        raise ValueError(
-            f"entity dictionary has more than {max_surfaces} distinct "
-            "surfaces — too large for the in-UDF Aho-Corasick broadcast. "
-            "Raise PipelineConfig.dict_max_surfaces only if the driver "
-            "has heap for it, or use the pipeline entrypoints, which "
-            "degrade to the shuffle-join gazetteer automatically."
-        )
-    return surfaces
 
 
 @dataclass
@@ -89,7 +72,7 @@ class PipelineResult:
     labels: DataFrame
     triples: DataFrame
     hot: list[str]
-    # "broadcast", or "shard_fallback"/"join_fallback" (oversized dict)
+    # "broadcast", or "shard_fallback" (oversized dict)
     dict_mode: str = "broadcast"
 
     def unpersist(self) -> None:
@@ -112,57 +95,24 @@ def extract_stage(
 
     Dictionary-size adaptivity (VERDICT r03 next#8): when the distinct
     surface count exceeds ``cfg.dict_max_surfaces``, the in-UDF
-    Aho-Corasick gazetteer degrades to a dictionary-scale matcher
-    instead of raising — the dictionary never touches the driver.
-    ``cfg.fallback_matcher`` picks which (r06 default "shard": the
-    dictionary-shard trie probe, exact automaton parity, ~3× faster
-    measured wall than the expression join — BENCH/BASELINE.md r06).
-    ``mode_out`` (if passed) receives ``{"dict_mode": "broadcast" |
-    "shard_fallback" | "join_fallback"}`` so runners can record the
+    Aho-Corasick gazetteer degrades to the dictionary-shard trie probe
+    (exact automaton parity) instead of raising — the dictionary never
+    touches the driver; regex+CRF still run in the one fused Arrow
+    pass. ``mode_out`` (if passed) receives ``{"dict_mode":
+    "broadcast" | "shard_fallback"}`` so runners can record the
     decision in lineage."""
     txt = text_spans(explode_spans(docs))
     surfaces = try_collect_surfaces(dict_df, cfg.dict_max_surfaces)
-    fallback = f"{cfg.fallback_matcher}_fallback"
     if mode_out is not None:
-        mode_out["dict_mode"] = "broadcast" if surfaces is not None else fallback
+        mode_out["dict_mode"] = "broadcast" if surfaces is not None else "shard_fallback"
+    fused = fused_matches(
+        txt, spark, surfaces or [],
+        enable_phone=cfg.enable_phone, enable_crf=cfg.enable_crf,
+    )
     if surfaces is None:
-        if cfg.fallback_matcher == "shard":
-            from pie_spark.extract.gazetteer_shard import gazetteer_shard_matches
-
-            gaz = gazetteer_shard_matches(
-                txt, dict_df, salt_parts=cfg.shard_salt_parts
-            )
-        else:
-            from pie_spark.extract.gazetteer_join import gazetteer_join_matches
-
-            gaz = gazetteer_join_matches(
-                txt, dict_df, hot=list(cfg.hot_surfaces), salt_k=cfg.salt_k
-            )
-        if cfg.fuse_detectors:
-            # regex+CRF still fuse into one Arrow pass; the gazetteer
-            # rides the join path and merges with them afterwards
-            fused = fused_matches(
-                txt, spark, [],
-                enable_phone=cfg.enable_phone, enable_crf=cfg.enable_crf,
-            )
-            return merge_mentions(fused, gaz)
-        detectors = [regex_matches(txt, enable_phone=cfg.enable_phone), gaz]
-        if cfg.enable_crf:
-            detectors.append(crf_matches(txt))
-        return merge_mentions(*detectors)
-    if cfg.fuse_detectors:
-        fused = fused_matches(
-            txt, spark, surfaces,
-            enable_phone=cfg.enable_phone, enable_crf=cfg.enable_crf,
-        )
-        return merge_mentions(fused)
-    detectors = [
-        regex_matches(txt, enable_phone=cfg.enable_phone),
-        gazetteer_matches(txt, spark, surfaces),
-    ]
-    if cfg.enable_crf:
-        detectors.append(crf_matches(txt))
-    return merge_mentions(*detectors)
+        gaz = gazetteer_shard_matches(txt, dict_df, salt_parts=cfg.shard_salt_parts)
+        return merge_mentions(fused, gaz)
+    return merge_mentions(fused)
 
 
 def downstream_stage(
@@ -179,9 +129,9 @@ def downstream_stage(
     from the broadcast hash join to the salted shuffle join (J6) — the
     oversized-dictionary path, salted on the A4 hot keys."""
     spans = explode_spans(docs)
-    # media branch reads only (kind, media_ref) from parquet — explode
-    # (not posexplode) keeps nested pruning alive, so spans.text is
-    # never scanned twice (r07; media_triples needs no positions)
+    # media branch carries only (doc_id, media_ref) past the explode;
+    # the parquet ReadSchema still includes spans.text (no nested
+    # pruning through the array explode — see media_refs)
     med = media_refs(docs)
 
     # Hot keys for J6 link salting on the fallback path —

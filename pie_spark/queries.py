@@ -722,7 +722,7 @@ def q_regex_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternation + SSN validity) hash-checked against DuckDB per-type
     regex extraction on a constructed corpus containing every PII type
     plus adversarial negatives (bare 9-digit id, invalid-area SSN)."""
-    from pie_spark.extract.matchers import regex_matches
+    from pie_spark.extract.fused import fused_matches
 
     # single-file fixture → repartition so the Arrow UDF parallelizes
     c = _t(spark, sf_dir, "customer").repartition(32, "c_custkey")
@@ -732,7 +732,7 @@ def q_regex_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).alias("offset"),
         _pii_text_parts(F.col("c_custkey"), F.col("c_name")).alias("text"),
     )
-    m = regex_matches(spans)
+    m = fused_matches(spans, spark, [], enable_crf=False)
     w = Window.partitionBy("doc_id", "mention_type").orderBy("start")
     return m.select(
         "doc_id", "mention_type", "surface",
@@ -854,17 +854,11 @@ def q_pipeline_mentions_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     on absolute (start, end) offsets, so chain bridging by CRF spans
     (a tagger mention can merge two gazetteer chains into one) is
     hash-visible."""
-    from pie_spark.extract.gazetteer import gazetteer_matches
-    from pie_spark.extract.matchers import regex_matches
+    from pie_spark.extract.fused import fused_matches
     from pie_spark.extract.merge import merge_mentions
-    from pie_spark.extract.tagger import crf_matches
 
     spans = _mentions_corpus(spark, sf_dir)
-    merged = merge_mentions(
-        regex_matches(spans),
-        gazetteer_matches(spans, spark, _GAZ_Q_SURFACES),
-        crf_matches(spans),
-    )
+    merged = merge_mentions(fused_matches(spans, spark, _GAZ_Q_SURFACES))
     return merged.select(
         "doc_id", "mention_type", "surface", "detector",
         F.col("start").cast("long").alias("start"),
@@ -1106,7 +1100,7 @@ def q_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     offset-fold operator. Hash-checked against chained DuckDB
     regexp_replace (with the validity rule as a pure regular language),
     which is equivalent because merged mentions never overlap."""
-    from pie_spark.extract.matchers import regex_matches
+    from pie_spark.extract.fused import fused_matches
     from pie_spark.extract.redact import redact_spans
 
     c = _t(spark, sf_dir, "customer").repartition(32, "c_custkey")
@@ -1116,7 +1110,7 @@ def q_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).alias("offset"),
         _pii_text_parts(F.col("c_custkey"), F.col("c_name")).alias("text"),
     )
-    m = regex_matches(spans).select(
+    m = fused_matches(spans, spark, [], enable_crf=False).select(
         "doc_id", "span_idx", "start", "end", "mention_type"
     )
     return redact_spans(spans, m).select("doc_id", "redacted")

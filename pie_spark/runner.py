@@ -71,7 +71,7 @@ def run_checkpointed(
         # Recover dict_mode from the extract snapshot's meta (ADVICE
         # r04): a fully-covered resume never re-probes the dictionary,
         # and defaulting to "broadcast" would hand downstream_stage an
-        # F.broadcast() on the very dictionary the join fallback exists
+        # F.broadcast() on the very dictionary the shard fallback exists
         # to keep off the driver. Partial resumes re-probe in
         # extract_stage; setdefault keeps that (identical) answer.
         mode.setdefault(

@@ -40,19 +40,6 @@ MENTION_SCHEMA = T.StructType(
     ]
 )
 
-# matcher/tagger UDF return element (within one span text)
-MATCH_STRUCT = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("start", T.IntegerType(), False),
-            T.StructField("end", T.IntegerType(), False),
-            T.StructField("mention_type", T.StringType(), False),
-            T.StructField("surface", T.StringType(), False),
-            T.StructField("score", T.DoubleType(), False),
-        ]
-    )
-)
-
 # output triples (SURVEY.md §1.3)
 TRIPLE_SCHEMA = T.StructType(
     [

@@ -88,16 +88,14 @@ def test_giant_document(spark):
 
 def test_oversized_dictionary_fails_fast(spark):
     """The gazetteer collect is size-probed: past dict_max_surfaces it
-    raises instead of OOMing the driver (VERDICT r01 wrong#5)."""
-    import pytest
-
-    from pie_spark.pipeline import collect_surfaces
+    returns None (→ the shard fallback) instead of OOMing the driver
+    (VERDICT r01 wrong#5)."""
+    from pie_spark.pipeline import try_collect_surfaces
 
     big = spark.range(10).selectExpr("cast(id as string) as surface")
-    with pytest.raises(ValueError, match="dict_max_surfaces"):
-        collect_surfaces(big, max_surfaces=5)
+    assert try_collect_surfaces(big, max_surfaces=5) is None
     # under the cap: plain strings, all present
-    assert sorted(collect_surfaces(big, max_surfaces=10)) == sorted(
+    assert sorted(try_collect_surfaces(big, max_surfaces=10)) == sorted(
         str(i) for i in range(10)
     )
 

@@ -28,7 +28,7 @@ def test_gate_applicable_on_fixture_dictionary():
     assert _gate_applicable(_surfaces())
     # a pure-lowercase surface must disable the gate
     assert not _gate_applicable(["acme corp"])
-    assert _gate_applicable([])  # CRF+regex only (join-fallback path)
+    assert _gate_applicable([])  # CRF+regex only (shard-fallback path)
 
 
 def test_lowercase_soup_yields_no_mentions_any_detector():

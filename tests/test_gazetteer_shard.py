@@ -1,11 +1,13 @@
-"""Dictionary-shard trie-probe gazetteer (M6 fallback path 2) ≡
-Aho-Corasick automaton EXACTLY — including the non-token-aligned
-occurrences the expression-join path's coverage contract excludes
-(VERDICT r05 next#1)."""
+"""Dictionary-shard trie-probe gazetteer (the dictionary-scale M6
+fallback) ≡ Aho-Corasick automaton EXACTLY — including non-token-aligned
+occurrences (VERDICT r05 next#1) — plus the pipeline's oversized-
+dictionary degradation path (VERDICT r03 next#8)."""
 
 from __future__ import annotations
 
-from pie_spark.extract.gazetteer import gazetteer_matches
+from pyspark.sql import functions as F
+
+from pie_spark.extract.fused import fused_matches
 from pie_spark.extract.gazetteer_shard import gazetteer_shard_matches
 
 from .conftest import SF_DIR
@@ -15,6 +17,13 @@ _KEY = ["doc_id", "span_idx", "start", "end", "surface"]
 
 def _hits(df):
     return {tuple(r) for r in df.select(*_KEY).collect()}
+
+
+def _automaton(spans, spark, surfaces):
+    """Parity reference: the broadcast automaton's hits, i.e. the fused
+    detector's gazetteer rows (same AhoCorasick + _boundary_ok)."""
+    fused = fused_matches(spans, spark, surfaces, enable_crf=False)
+    return _hits(fused.filter(F.col("detector") == "gazetteer"))
 
 
 def _spans(spark, rows):
@@ -30,8 +39,8 @@ def _dict_df(spark, surfaces):
 
 def test_shard_matches_equal_automaton_incl_non_token_aligned(spark):
     """The shard path must find mid-token burials (interior punctuation)
-    that the join path documents as non-covered — exact automaton
-    parity, not the token-aligned contract."""
+    — exact automaton parity, not a token-aligned contract — and match
+    punctuation inside the surface and around the occurrence."""
     surfaces = [
         "Mei Novak",
         "Mei Novak Jr.",
@@ -42,7 +51,7 @@ def test_shard_matches_equal_automaton_incl_non_token_aligned(spark):
     texts = [
         "Mei Novak spoke first",
         "we met (Mei Novak) yesterday",
-        "aa-Whitfield-bb is a mid-token burial",   # join path misses this
+        "aa-Whitfield-bb is a mid-token burial",   # not token-aligned
         "Mei Novak Jr., they said",
         "ask A. Bergstrom about it",
         "xxMei Novakzz is not a name",              # alnum flanks → no hit
@@ -50,9 +59,11 @@ def test_shard_matches_equal_automaton_incl_non_token_aligned(spark):
         "meet Grace Whitfield",
         "",
         "--- punctuation only ---",
+        "call Mei Novak, then leave",               # trailing comma in text
+        "Mei Novak Jr. arrived late",               # surface with tail punct
     ]
     spans = _spans(spark, texts)
-    ac = _hits(gazetteer_matches(spans, spark, surfaces))
+    ac = _automaton(spans, spark, surfaces)
     sh = _hits(gazetteer_shard_matches(spans, _dict_df(spark, surfaces)))
     assert sh == ac
     # the burial IS found (automaton semantics), proving the stronger contract
@@ -70,7 +81,7 @@ def test_shard_matches_equal_automaton_on_generator_corpus(spark):
     txt = text_spans(explode_spans(docs)).localCheckpoint(eager=True)
     surfaces = sorted({e.surface for e in dictionary_entries()})
 
-    ac = _hits(gazetteer_matches(txt, spark, surfaces))
+    ac = _automaton(txt, spark, surfaces)
     sh = _hits(gazetteer_shard_matches(txt, entity_dict_df(spark)))
     assert len(ac) > 0
     assert sh == ac
@@ -100,7 +111,7 @@ def test_shard_large_alphabet_hash_bucket_regime(spark):
         "nothing here",
     ]
     spans = _spans(spark, texts)
-    ac = _hits(gazetteer_matches(spans, spark, surfaces))
+    ac = _automaton(spans, spark, surfaces)
     sh = _hits(gazetteer_shard_matches(spans, _dict_df(spark, surfaces)))
     assert sh == ac and ("0", 0, 17, 26, "Mei Novak") in sh
 
@@ -112,9 +123,10 @@ def test_shard_empty_dictionary(spark):
 
 
 def test_shard_parity_fuzz_batch(spark):
-    """Seeded fuzz (the join path's batch, same seed): the shard path
-    must equal the automaton EXACTLY — burials and all — with zero
-    documented misses."""
+    """Seeded fuzz: random docs assembled from gazetteer surfaces wrapped
+    in random punctuation, decoy words, doubled spaces and deliberate
+    non-token-aligned burials — the shard path must equal the automaton
+    EXACTLY, burials and all."""
     import random
 
     surfaces = [
@@ -147,7 +159,68 @@ def test_shard_parity_fuzz_batch(spark):
     )
     # add "Whitfield"/"Mei" alone so burials are matchable surfaces
     all_surfaces = surfaces + ["Whitfield", "Mei"]
-    ac = _hits(gazetteer_matches(spans, spark, all_surfaces))
+    ac = _automaton(spans, spark, all_surfaces)
     sh = _hits(gazetteer_shard_matches(spans, _dict_df(spark, all_surfaces)))
     assert sh == ac
     assert len(ac) > 200
+
+
+def test_shard_long_surfaces_match_automaton(spark):
+    """4+-token surfaces must match: the candidate window is sized from
+    the dictionary's own per-first-char max surface length."""
+    surfaces = ["Ana Maria de Souza", "Mei Novak", "Jean Pierre van Damme Jr."]
+    texts = [
+        "we saw Ana Maria de Souza yesterday",
+        "(Ana Maria de Souza) and Mei Novak spoke",
+        "Jean Pierre van Damme Jr. arrived",
+        "Ana Maria de Souzaz is not a hit",
+    ]
+    spans = _spans(spark, texts)
+    ac = _automaton(spans, spark, surfaces)
+    sh = _hits(gazetteer_shard_matches(spans, _dict_df(spark, surfaces)))
+    assert sh == ac
+    assert ("0", 0, 7, 25, "Ana Maria de Souza") in sh
+    assert ("2", 0, 0, 25, "Jean Pierre van Damme Jr.") in sh
+
+
+def test_pipeline_degrades_to_shard_fallback(spark):
+    """PipelineConfig(dict_max_surfaces=<tiny>) must complete via the
+    shard path with IDENTICAL triples to the broadcast run, and record
+    dict_mode='shard_fallback'."""
+    from pie_spark.config import PipelineConfig
+    from pie_spark.fixtures.gen import entity_dict_df, interleaved_docs
+    from pie_spark.pipeline import run
+
+    docs = interleaved_docs(spark, SF_DIR).limit(120).localCheckpoint(eager=True)
+    d = entity_dict_df(spark)
+
+    base = run(spark, PipelineConfig(), docs, d)
+    assert base.dict_mode == "broadcast"
+    t_base = {tuple(r) for r in base.triples.select("subj", "pred", "obj").collect()}
+
+    fb = run(spark, PipelineConfig(dict_max_surfaces=10), docs, d)
+    assert fb.dict_mode == "shard_fallback"
+    t_fb = {tuple(r) for r in fb.triples.select("subj", "pred", "obj").collect()}
+
+    assert t_fb == t_base and len(t_base) > 0
+    base.unpersist()
+    fb.unpersist()
+
+
+def test_runner_records_dict_mode_in_lineage(spark, tmp_path):
+    from pie_spark.config import PipelineConfig
+    from pie_spark.fixtures.gen import entity_dict_df, interleaved_docs
+    from pie_spark.io.snapshots import SnapshotTable
+    from pie_spark.runner import run_checkpointed
+
+    docs = interleaved_docs(spark, SF_DIR).limit(40).localCheckpoint(eager=True)
+    cfg = PipelineConfig(
+        dict_max_surfaces=10,
+        checkpoint_dir=str(tmp_path / "ck"),
+        output_path=str(tmp_path / "out"),
+    )
+    out = run_checkpointed(spark, cfg, docs, entity_dict_df(spark))
+    assert out.result.dict_mode == "shard_fallback"
+    meta = SnapshotTable(cfg.output_path).snapshots()[-1].meta
+    assert meta["dict_mode"] == "shard_fallback"
+    out.result.unpersist()

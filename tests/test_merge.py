@@ -56,33 +56,6 @@ def test_mention_id_stable(spark):
     assert a == b
 
 
-def test_fused_detector_equals_separate_detectors(spark):
-    """fused single-pass stage ≡ union of the three standalone detectors
-    after overlap-merge (bit-identical mention sets)."""
-    from pie_spark.extract.fused import fused_matches
-    from pie_spark.extract.gazetteer import gazetteer_matches
-    from pie_spark.extract.matchers import regex_matches
-    from pie_spark.extract.merge import merge_mentions
-    from pie_spark.extract.spans import explode_spans, text_spans
-    from pie_spark.extract.tagger import crf_matches
-    from pie_spark.fixtures.gen import entity_dict_df, interleaved_docs
-
-    docs = interleaved_docs(spark, "/root/testdata/sf0.001")
-    txt = text_spans(explode_spans(docs))
-    surfaces = [
-        r.surface for r in entity_dict_df(spark).select("surface").distinct().collect()
-    ]
-    sep = merge_mentions(
-        regex_matches(txt), gazetteer_matches(txt, spark, surfaces), crf_matches(txt)
-    )
-    fus = merge_mentions(fused_matches(txt, spark, surfaces))
-    cols = ["doc_id", "span_idx", "start", "end", "mention_type", "surface",
-            "detector", "score", "mention_id"]
-    a = sorted(tuple(r) for r in sep.select(cols).collect())
-    b = sorted(tuple(r) for r in fus.select(cols).collect())
-    assert a == b and len(a) > 0
-
-
 def test_detect_all_batch_equals_per_text():
     import duckdb
 

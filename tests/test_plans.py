@@ -5,15 +5,14 @@ are verified in the plan itself, not just claimed —
   Python stage (media payloads never cross into Arrow),
 * the dictionary join is a broadcast hash join (no corpus shuffle),
 * the merge windows share ONE shuffle (same partitioning, two passes),
-* linking's top-1 is a hash aggregation with a map-side partial, not a
-  global sort.
+* linking's top-1 is a partial + final min_by aggregation riding the
+  merge's partitioning (no extra exchange), not a ranking window.
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
-import re
 
 import pytest
 
@@ -224,39 +223,6 @@ def test_stratified_sample_rates_broadcast(spark):
     rates = temperature_rates(d, "lang", temperature=0.7)
     plan = _explain(stratified_sample(d, rates, "lang"), "simple")
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
-
-
-def test_gazetteer_join_candidates_filter_first(spark, docs_parquet):
-    """r06 candidate shape (VERDICT r05 next#1): the cheap per-token
-    first-char dispatch must run as a Filter BETWEEN the token-index
-    Generate and the per-survivor gram Project — i.e. offsets/strips
-    are computed only for survivors (the 1M profile showed the r05
-    compute-then-prune shape cost 26–28 s of the 27–29 s wall). The
-    old pin (__offs/__lc helper attrs under the Generate) guarded the
-    r05 shape, which computed those arrays for EVERY token; their
-    absence is now intended — per-survivor scalars re-inline safely,
-    unlike the r02/r04 shared-array shingle pathology."""
-    from pie_spark.extract.gazetteer_join import _exploded_candidates
-    from pie_spark.schemas import DOC_SCHEMA
-
-    docs = spark.read.schema(DOC_SCHEMA).parquet(docs_parquet)
-    txt = text_spans(explode_spans(docs))
-    plan = _explain(_exploded_candidates(txt, {n: (5, 30) for n in (1, 2, 3)}))
-    # two Generates (token indices, then gram structs) with the
-    # dispatch Filter in between, below the struct-building Project
-    gen_project_filter_gen = re.search(
-        r"Generate.*?Project.*?Filter.*?Generate", plan, re.S
-    )
-    assert gen_project_filter_gen, plan
-    # the old whole-token helper arrays must NOT be materialized
-    assert "__offs" not in plan and "__lc" not in plan
-    # and the full matcher never drops into Python or sorts
-    from pie_spark.extract.gazetteer_join import gazetteer_join_matches
-    from pie_spark.fixtures.gen import entity_dict_df
-
-    full = _explain(gazetteer_join_matches(txt, entity_dict_df(spark)))
-    assert "EvalPython" not in full
-    assert "Sort " not in full.replace("SortMergeJoin", "")
 
 
 def test_lm_scoring_joins_are_broadcast_no_python(spark):

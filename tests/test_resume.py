@@ -114,7 +114,7 @@ def test_resume_recovers_dict_mode_from_snapshot_meta(spark, tmp_path):
     """ADVICE r04: a fully-covered resume never re-probes the
     dictionary, so dict_mode must come back from the extract snapshot's
     meta — otherwise downstream_stage would F.broadcast() the oversized
-    dictionary the join fallback exists to keep off the driver."""
+    dictionary the shard fallback exists to keep off the driver."""
     docs = interleaved_docs(spark, SF_DIR).limit(40).localCheckpoint(eager=True)
     d = entity_dict_df(spark)
     ckpt = str(tmp_path / "ck")
