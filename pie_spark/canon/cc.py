@@ -32,6 +32,13 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from pie_spark.session import local_frame
+
+LABEL_SCHEMA = T.StructType(
+    [T.StructField("node", T.StringType()), T.StructField("component", T.StringType())]
+)
 
 
 def connected_components(
@@ -177,7 +184,10 @@ def adaptive_components(
     oversized graph ships at most one row past the cap before falling
     back, and the under-cap case never computes the edge lineage twice.
     Arrow plain strings, not pyspark Row objects (~10x lighter per edge
-    on the driver heap).
+    on the driver heap). The union-find labels go back the same way: an
+    Arrow-built local relation (``LocalTableScan`` via
+    :func:`pie_spark.session.local_frame`), so the canon stage's scans
+    of them never start a Python task.
 
     Salting on the distributed path is chosen from MEASURED degree
     stats (VERDICT r05 next#3), not a caller-supplied guess: one
@@ -208,9 +218,8 @@ def adaptive_components(
             labels = union_find(
                 list(zip(tbl.column("src").to_pylist(), tbl.column("dst").to_pylist()))
             )
-            return spark.createDataFrame(
-                sorted(labels.items()), "node string, component string"
-            )
+            nodes = sorted(labels)
+            return local_frame(spark, LABEL_SCHEMA, [nodes, [labels[n] for n in nodes]])
     from pie_spark.canon.salting import salt_edges, strip_salted_nodes
 
     if hot_degree_min > 0:

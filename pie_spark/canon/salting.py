@@ -24,6 +24,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from pie_spark.session import local_frame
 
 
 def salted_join(
@@ -68,8 +71,8 @@ def salt_edges(edges: DataFrame, hot_nodes: list[str], salt_k: int) -> DataFrame
         .otherwise(F.col("dst"))
         .alias("dst"),
     )
-    hot_df = edges.sparkSession.createDataFrame(
-        [(h,) for h in hot_nodes], ["node"]
+    hot_df = local_frame(
+        edges.sparkSession, T.StructType([T.StructField("node", T.StringType())]), [hot_nodes]
     )
     star = hot_df.select(
         F.col("node").alias("src"),

@@ -13,8 +13,13 @@ every mention with its `detector` tag so the downstream overlap-merge
 ``surfaces=[]`` (no gazetteer hits) and/or ``enable_crf=False``.
 
 At the 10^12-doc design point this is the single most expensive stage
-of the whole pipeline (the only one that leaves the JVM), so the
-detectors share its one scan and one Arrow round trip.
+of the whole pipeline, so the detectors share its one scan and one
+Arrow round trip. It is also the only place the pipeline leaves the
+JVM: the dictionary and the CC labels are JVM-local relations
+(``LocalTableScan``), and tests/test_plans.py pins that the extract and
+triples plans hold no ``Scan ExistingRDD``. Each Python worker builds
+the gazetteer automaton once and keeps it across tasks
+(:func:`pie_spark.extract.gazetteer.cached_automaton`).
 """
 
 from __future__ import annotations
@@ -28,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from pie_spark.extract.gazetteer import _AC_CACHE, AhoCorasick, find_gazetteer_matches
+from pie_spark.extract.gazetteer import AhoCorasick, cached_automaton, find_gazetteer_matches
 from pie_spark.extract.matchers import find_matches
 from pie_spark.extract.tagger import tag_text, tag_texts
 
@@ -112,6 +117,22 @@ def _gate_applicable(surfaces: list[str]) -> bool:
     return all(_PURE_LOWER.search(s) for s in surfaces)
 
 
+def detector_udf_fn(surfaces, cache_key: int, enable_phone: bool, enable_crf: bool):
+    """The fused UDF's Iterator[Series] body. ``surfaces`` is the
+    broadcast surface list and ``cache_key`` its content hash; the
+    automaton comes from the worker's cache, so a task on a reused
+    Python worker does not rebuild it."""
+
+    def det(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        ac = cached_automaton(cache_key, surfaces)
+        for texts in batches:
+            yield pd.Series(
+                detect_all_batch(list(texts), ac, enable_phone, enable_crf)
+            )
+
+    return det
+
+
 def fused_matches(
     text_spans: DataFrame,
     spark: SparkSession,
@@ -132,17 +153,9 @@ def fused_matches(
     surf_list = sorted(set(surfaces))
     bc = spark.sparkContext.broadcast(surf_list)
     cache_key = zlib.crc32("\x00".join(surf_list).encode())
-
-    @pandas_udf(FUSED_MATCH_STRUCT)
-    def det(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        ac = _AC_CACHE.get(cache_key)
-        if ac is None:
-            ac = AhoCorasick(bc.value)
-            _AC_CACHE[cache_key] = ac
-        for texts in batches:
-            yield pd.Series(
-                detect_all_batch(list(texts), ac, enable_phone, enable_crf)
-            )
+    det = pandas_udf(
+        detector_udf_fn(bc, cache_key, enable_phone, enable_crf), FUSED_MATCH_STRUCT
+    )
 
     with_m = text_spans.select("doc_id", "span_idx", "offset", det("text").alias("ms"))
     return with_m.select(

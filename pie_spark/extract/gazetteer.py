@@ -8,8 +8,9 @@ standard broadcast-dictionary pattern from the spec (BASELINE.json:6
 
 Scale notes:
   * the automaton build is O(total surface chars) and happens once per
-    executor Python worker, not per row/batch (module-level cache keyed
-    by a content hash of the surface list).
+    executor Python worker, not per task/row/batch
+    (:func:`cached_automaton`, a module-level cache keyed by a content
+    hash of the surface list).
   * matches are emitted for *all* dictionary hits incl. overlaps;
     overlap resolution is the merge operator's job (T3/W3) so priority
     rules live in exactly one place.
@@ -105,5 +106,20 @@ def find_gazetteer_matches(text: str, ac: AhoCorasick) -> list[dict]:
     return out
 
 
-# per-worker automaton cache: {crc32 of the surface list: AhoCorasick}
+# per-worker automaton cache: {crc32 of the surface list: AhoCorasick}.
+# Only :func:`cached_automaton` may touch it: a UDF closure that named
+# this dict directly would be cloudpickled with a *copy* of it, so every
+# task would unpickle an empty cache and rebuild the automaton. A
+# module-level function is pickled by reference and sees the worker's
+# real module globals.
 _AC_CACHE: dict[int, AhoCorasick] = {}
+
+
+def cached_automaton(cache_key: int, surfaces) -> AhoCorasick:
+    """The worker's automaton for ``cache_key`` (a content hash of the
+    surface list), built from ``surfaces.value`` (a broadcast) on first
+    use in this Python process."""
+    ac = _AC_CACHE.get(cache_key)
+    if ac is None:
+        ac = _AC_CACHE[cache_key] = AhoCorasick(surfaces.value)
+    return ac

@@ -37,6 +37,7 @@ from pie_spark.schemas import (
     GOLDEN_MENTION_SCHEMA,
     GOLDEN_TRIPLE_SCHEMA,
 )
+from pie_spark.session import local_frame
 
 MEDIA_ADVANCE = 16  # media spans advance the char offset by a fixed 16 (FIXTURES.md §2.4)
 
@@ -373,9 +374,12 @@ def golden_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def entity_dict_df(spark: SparkSession) -> DataFrame:
-    """Gazetteer as a small DataFrame (broadcast side of J1)."""
+    """Gazetteer as a small DataFrame (broadcast side of J1): an
+    Arrow-built local relation (``LocalTableScan``, see
+    :func:`pie_spark.session.local_frame`), so scanning it runs no
+    Python task."""
     rows = [
         (e.surface, e.norm_key, e.entity_id, e.entity_type, e.prior)
         for e in gz.dictionary_entries()
     ]
-    return spark.createDataFrame(rows, schema=DICT_SCHEMA)
+    return local_frame(spark, DICT_SCHEMA, list(zip(*rows)))

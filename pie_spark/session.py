@@ -3,13 +3,19 @@
 AQE on (north_rule BASELINE.json:14 — "AQE-tuned shuffles"), Arrow on
 (input_hint — vectorized pandas/Arrow UDFs), skew-join on as the
 backstop behind our explicit salting (SURVEY.md §4).
+
+Driver-built frames (the entity dictionary, the driver-path CC labels,
+the salted-CC hot list) go through :func:`local_frame`, so their scans
+stay in the JVM.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def build_session(
@@ -43,6 +49,15 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("PIE_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Janino class cache (static conf, default 100 entries). One
+        # steady-state pipeline run generates ~130-150 distinct classes
+        # (measured with CodegenMetrics: 131 per fresh run_checkpointed,
+        # ~151 per resume), so the default cache evicts the run's own
+        # classes before the next run needs them and every run
+        # recompiles them all, keeping the JIT compiler threads busy
+        # too. 1000 entries hold a whole run with room for the query
+        # suite; a repeated run then compiles a handful of classes.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     # Shuffle/spill dir: tmpfs removes the single-disk I/O serialization
     # that caps multi-core scaling on this box, BUT spills landing in RAM
@@ -62,3 +77,12 @@ def build_session(
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, schema: T.StructType, columns: list) -> DataFrame:
+    """DataFrame over driver-side columns (one sequence per ``schema``
+    field), built from a ``pyarrow.Table``: Spark plans it as a
+    JVM-local ``LocalTableScan``. A list of rows would instead become a
+    ``parallelize`` RDD (``Scan ExistingRDD``) whose every scan runs
+    Python tasks in a second worker daemon."""
+    return spark.createDataFrame(pa.table(dict(zip(schema.names, columns))), schema)

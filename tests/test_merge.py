@@ -75,3 +75,34 @@ def test_detect_all_batch_equals_per_text():
     got = detect_all_batch(texts, ac, True, True)
     want = [detect_all(t, ac, True, True) if t is not None else [] for t in texts]
     assert got == want
+
+
+def test_fused_udf_builds_automaton_once_per_worker(monkeypatch):
+    """The fused UDF is shipped by value (cloudpickle); each task
+    unpickles it anew. Two round trips in one process stand for two
+    tasks on one reused Python worker: the automaton must be built once,
+    not once per task (the worker cache must not travel with the UDF)."""
+    import types
+
+    import pandas as pd
+    from pyspark import cloudpickle
+
+    from pie_spark.extract import gazetteer
+    from pie_spark.extract.fused import detector_udf_fn
+
+    builds = []
+
+    class CountingAhoCorasick(gazetteer.AhoCorasick):
+        def __init__(self, patterns):
+            builds.append(list(patterns))
+            super().__init__(patterns)
+
+    monkeypatch.setattr(gazetteer, "AhoCorasick", CountingAhoCorasick)
+    monkeypatch.setattr(gazetteer, "_AC_CACHE", {})
+    surfaces = types.SimpleNamespace(value=["Mei Novak"])
+    fn = detector_udf_fn(surfaces, 12345, True, False)
+    for _ in range(2):
+        task_fn = cloudpickle.loads(cloudpickle.dumps(fn))
+        (out,) = list(task_fn(iter([pd.Series(["met Mei Novak today"])])))
+        assert [m["surface"] for m in out[0] if m["detector"] == "gazetteer"] == ["Mei Novak"]
+    assert builds == [["Mei Novak"]]

@@ -175,11 +175,16 @@ def test_decontam_benchmark_is_broadcast(spark):
 
 def test_fused_stage_single_python_pass_whole_pipeline(spark, docs_parquet):
     """End-to-end triples plan: exactly one ArrowEvalPython (the fused
-    detector) — the only place the pipeline leaves the JVM."""
+    detector) — the only place the pipeline leaves the JVM. No
+    ``Scan ExistingRDD`` either: a list-built frame (dictionary, CC
+    labels) scans through Python tasks in a second worker daemon."""
     from pie_spark.config import PipelineConfig
-    from pie_spark.pipeline import run
+    from pie_spark.pipeline import extract_stage, run
 
     docs = spark.read.schema(DOC_SCHEMA).parquet(docs_parquet)
+    assert "ExistingRDD" not in _explain(
+        extract_stage(spark, PipelineConfig(), docs, entity_dict_df(spark)), "simple"
+    )
     res = run(spark, PipelineConfig(), docs, entity_dict_df(spark))
     res.merged_mentions.count()  # materialize the cache
     plan = _explain(res.triples, "simple")
@@ -188,7 +193,21 @@ def test_fused_stage_single_python_pass_whole_pipeline(spark, docs_parquet):
     # cached child plan once per consumer) — the UDF executes once.
     assert "InMemoryTableScan" in plan
     assert plan.count("ArrowEvalPython") <= plan.count("InMemoryTableScan")
+    assert "ExistingRDD" not in plan
     res.unpersist()
+
+
+def test_driver_built_frames_are_local_relations(spark):
+    """The dictionary and the driver union-find CC labels are Arrow-built
+    JVM-local relations, not parallelized Python RDDs."""
+    from pie_spark.canon.cc import adaptive_components
+    from pie_spark.canon.edges import build_edges
+
+    d = entity_dict_df(spark)
+    labels = adaptive_components(spark, build_edges(d))
+    for df in (d, labels):
+        plan = _explain(df, "simple")
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
 
 
 def test_passage_dedup_survivor_election_is_hash_agg(spark):
