@@ -69,7 +69,6 @@ def main() -> None:
         )
 
     cfg = PipelineConfig(
-        input_path=args.input,
         output_path=args.output,
         checkpoint_dir=args.checkpoint,
         resume=args.resume,

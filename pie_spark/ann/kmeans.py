@@ -3,8 +3,9 @@
 trained centroids when a training pass is affordable).
 
 Per iteration: ONE assignment pass (corpus × broadcast centroids →
-``min_by`` hash aggregation — algebraic, map-side combinable, no
-window/sort) and ONE update pass (posexplode → (cluster, dim) partial
+``min_by`` aggregation — algebraic, map-side combinable, no window; it
+plans as a SortAggregate, since its struct buffer carries the array
+vector and so is not hash-aggregatable) and ONE update pass (posexplode → (cluster, dim) partial
 agg of integer micro-units — the cluster_centroids discipline:
 ``avg(double)`` sums in partition order and breaks determinism, so
 components are summed as exact longs and floor-divided once). The
@@ -48,7 +49,9 @@ def _hash_seed_centroids(c: DataFrame, k: int) -> DataFrame:
 
 def assign(c: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, v, cent_id): nearest centroid by cosine, total-order
-    tiebreak — a min_by hash aggregation over the broadcast fan-out."""
+    tiebreak — a min_by aggregation over the broadcast fan-out (a
+    partial + final SortAggregate around one exchange: the buffer
+    holds the array vector, which rules out HashAggregate)."""
     ranked = F.struct(
         (-cosine(F.col("v"), F.col("cv"))).alias("ncs"),
         F.col("cent_id").alias("cid"),

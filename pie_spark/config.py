@@ -1,9 +1,11 @@
 """Pipeline configuration (SURVEY.md §7.4).
 
-Every knob that matters at 10^12-document scale is explicit here so a
-cluster run can size shuffles / buckets / Arrow batches without code
-edits (BASELINE.json:14 — partitioning / shuffle / skew handled
-explicitly).
+Every pipeline knob that matters at 10^12-document scale is explicit
+here so a cluster run can size buckets, skew salting, the dictionary
+fallback and the CC loop without code edits (BASELINE.json:14 —
+partitioning / shuffle / skew handled explicitly). Session-level
+settings (shuffle partitions, Arrow batch size) are
+``session.build_session`` arguments, not pipeline config.
 """
 
 from __future__ import annotations
@@ -13,17 +15,13 @@ from dataclasses import dataclass
 
 @dataclass(frozen=True)
 class PipelineConfig:
-    # --- input / output -------------------------------------------------
-    input_path: str = "/root/testdata/sf0.001"
+    # --- output ---------------------------------------------------------
     output_path: str = ""  # empty → pipeline returns DataFrames, no write
     # --- partitioning (north_rule: bucketed partitioning on doc_id) ------
     buckets: int = 64          # doc_id hash buckets for the triple sink
-    shuffle_partitions: int = 32
     # --- skew (north_rule: key salting on hot entities) -------------------
     hot_k: int = 100           # top-k hot norm_keys computed by A4
     salt_k: int = 8            # salt fan-out for hot keys (J6)
-    # --- Arrow / UDF batching (input_hint: vectorized pandas/Arrow UDFs) --
-    arrow_batch: int = 4096
     # --- feature flags -----------------------------------------------------
     enable_crf: bool = True    # BiLSTM-CRF-style tagger (SURVEY.md §2.4)
     enable_phone: bool = True  # PHONE matcher (inferred PII type, §2.3)

@@ -5,10 +5,12 @@ checkpoints").
 No Iceberg runtime jar exists in this sandbox (verified at survey
 time), so the engine ships a **TableFormat seam** with the semantics
 the spec needs — snapshot ids, atomic commits, snapshot-pinned scans,
-multi-dataset checkpoints — implemented as Parquet + a JSON manifest:
+multi-dataset checkpoints — implemented as Parquet + versioned JSON
+metadata:
 
-    <root>/_manifest.json                 ← commit pointer (atomic rename)
-    <root>/<dataset>/snap-<id>/*.parquet  ← immutable data files
+    <root>/_meta-<V>.json                    ← metadata version V, claimed
+                                               by exclusive hard-link
+    <root>/<dataset>/snap-<token>/*.parquet  ← immutable data files
 
 On a cluster with Iceberg available, ``SnapshotTable`` maps 1:1 onto
 the Iceberg API and can be swapped behind the same methods:
@@ -29,12 +31,14 @@ written exactly once. This is precisely Iceberg's optimistic-commit
 loop: writers race on the metadata-pointer swap, losers rebase and
 retry (Iceberg ``commit.retry.num-retries``); here the swap is the
 exclusive hard-link, there it is the catalog's atomic pointer CAS.
-A crash before the link leaves the previous snapshot current — data
-files of the dead snapshot are unreferenced garbage, never visible —
-the same reader-visible atomicity Iceberg's metadata swap gives.
-Readers load the highest ``_meta-*.json`` (complete by construction:
-it is hard-linked into place only after write+fsync); tables written
-by the pre-r06 layout fall back to legacy ``_manifest.json``.
+Every writer runs the same loop (``_cas``) and differs only in its
+``update`` rule. A crash before the link leaves the previous snapshot
+current — data files of the dead snapshot are unreferenced garbage,
+never visible — the same reader-visible atomicity Iceberg's metadata
+swap gives. Readers load the highest ``_meta-*.json`` (complete by
+construction: it is hard-linked into place only after write+fsync);
+tables written by the pre-r06 layout fall back to legacy
+``_manifest.json``.
 """
 
 from __future__ import annotations
@@ -45,6 +49,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,6 +73,50 @@ def _dirs(v: str | list[str]) -> list[str]:
     """A dataset's data dirs: single-dir commits stay plain strings in
     metadata (back-compat with pre-append tables); appends grow lists."""
     return v if isinstance(v, list) else [v]
+
+
+def _referenced(snapshots: list[dict]) -> set[str]:
+    """Every data dir the given snapshot records reference."""
+    return {p for s in snapshots for v in s["datasets"].values() for p in _dirs(v)}
+
+
+def _current(m: dict) -> dict:
+    """The current snapshot record of metadata ``m`` (an empty one for
+    a table with no snapshot yet)."""
+    if m["current"] is None:
+        return {"datasets": {}, "partitions": {}}
+    return next(s for s in m["snapshots"] if s["id"] == m["current"])
+
+
+def _next_snapshot(
+    m: dict, cur: dict, datasets: dict, meta: dict, partitions: dict | None = None
+) -> dict:
+    """Append the next snapshot record to ``m`` and make it current;
+    ``partitions`` defaults to the ones ``cur`` recorded. Returns ``m``."""
+    sid = (m["current"] or 0) + 1
+    m["snapshots"].append(
+        {
+            "id": sid,
+            "datasets": datasets,
+            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "parent": m["current"],
+            "meta": meta,
+            "partitions": (
+                dict(cur.get("partitions", {})) if partitions is None else partitions
+            ),
+        }
+    )
+    m["current"] = sid
+    return m
+
+
+def _record_keys(m: dict, keys: list[str]) -> None:
+    """Record applied idempotency keys. Metadata growth is bounded: a
+    retry can only replay the in-flight (most recent) epochs, so a
+    sliding window of applied keys is sufficient — same reasoning as
+    Iceberg's bounded snapshot-summary history."""
+    applied = m.setdefault("applied_keys", []) + keys
+    m["applied_keys"] = applied[-10_000:]
 
 
 class CommitConflictError(RuntimeError):
@@ -101,13 +150,18 @@ class SnapshotTable:
                     continue
         return best
 
-    def _read_manifest(self) -> dict:
+    def _load(self) -> tuple[int, dict]:
+        """``(version, metadata)`` from ONE directory listing: publishing
+        ``version + 1`` then fails iff another writer published since."""
         v = self._latest_version()
         path = self._manifest_path if v == 0 else self._meta_path(v)
         if not os.path.exists(path):
-            return {"current": None, "snapshots": []}
+            return v, {"current": None, "snapshots": []}
         with open(path) as f:
-            return json.load(f)
+            return v, json.load(f)
+
+    def _read_manifest(self) -> dict:
+        return self._load()[1]
 
     def _try_publish(self, m: dict, version: int) -> bool:
         """Atomically claim metadata ``version`` with ``m`` — the CAS.
@@ -125,6 +179,48 @@ class SnapshotTable:
             return False
         finally:
             os.unlink(tmp)
+
+    def _cas(self, op: str, update: Callable[[dict, dict], dict | None]) -> dict:
+        """The optimistic-commit loop every writer shares. Each attempt
+        loads the latest ``(version, m)`` and calls ``update(m, cur)``
+        with ``cur`` the current snapshot record. The rule either
+
+        * returns the metadata to publish — ``m`` edited in place,
+          usually by ``_next_snapshot`` — which is CAS-published as
+          version+1; a lost race re-runs ``update`` on the winner's
+          metadata (rebase), so it derives everything from ``(m, cur)``
+          and the data dirs the writer wrote before the loop;
+        * returns None — the call is a no-op, nothing is published;
+        * raises — the race must abort rather than rebase.
+
+        Returns the published (or, on a no-op, the loaded) metadata;
+        raises CommitConflictError after ``max_retries`` lost races."""
+        for _ in range(self.max_retries + 1):
+            v, m = self._load()
+            new = update(m, _current(m))
+            if new is None:
+                return m
+            if self._try_publish(new, v + 1):
+                return new
+        raise CommitConflictError(
+            f"{op} on {self.root} lost the metadata race "
+            f"{self.max_retries + 1} times"
+        )
+
+    def _write(self, datasets: dict[str, tuple[DataFrame, list[str]]]) -> dict[str, str]:
+        """Write each DataFrame (with its directory-partition columns)
+        into a uuid-unique ``snap-<token>`` dir; racing writers never
+        collide on paths. Returns dataset -> dir."""
+        token = uuid.uuid4().hex[:8]
+        paths: dict[str, str] = {}
+        for name, (df, part_cols) in datasets.items():
+            path = os.path.join(self.root, name, f"snap-{token}")
+            w = df.write.mode("overwrite")
+            if part_cols:
+                w = w.partitionBy(*part_cols)
+            w.parquet(path)
+            paths[name] = path
+        return paths
 
     # -- API ----------------------------------------------------------------
     def current_snapshot(self) -> int | None:
@@ -154,40 +250,12 @@ class SnapshotTable:
         CommitConflictError after ``max_retries`` lost races, leaving
         the table exactly as the winners published it (this commit's
         data dirs are unreferenced and never visible)."""
-        token = uuid.uuid4().hex[:8]
-        paths: dict[str, str] = {}
-        for name, (df, part_cols) in datasets.items():
-            path = os.path.join(self.root, name, f"snap-{token}")
-            w = df.write.mode("overwrite")
-            if part_cols:
-                w = w.partitionBy(*part_cols)
-            w.parquet(path)
-            paths[name] = path
+        paths = self._write(datasets)
         partitions = {n: list(pc) for n, (_, pc) in datasets.items() if pc}
-
-        for _ in range(self.max_retries + 1):
-            v = self._latest_version()
-            m = self._read_manifest()
-            sid = (m["current"] or 0) + 1
-            m["snapshots"].append(
-                {
-                    "id": sid,
-                    "datasets": paths,
-                    "committed_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                    "parent": m["current"],
-                    "meta": meta or {},
-                    "partitions": partitions,
-                }
-            )
-            m["current"] = sid
-            if self._try_publish(m, v + 1):
-                return sid
-        raise CommitConflictError(
-            f"commit to {self.root} lost the metadata race "
-            f"{self.max_retries + 1} times"
-        )
+        return self._cas(
+            "commit",
+            lambda m, cur: _next_snapshot(m, cur, paths, meta or {}, partitions),
+        )["current"]
 
     def append(self, datasets: dict[str, DataFrame], meta: dict | None = None) -> int:
         """Append-commit (Iceberg *fast append*): write each DataFrame
@@ -201,44 +269,15 @@ class SnapshotTable:
         precisely why Iceberg appends retry without revalidation while
         rewrites (``compact``) must abort on conflict. Datasets not
         named here are carried forward by reference."""
-        token = uuid.uuid4().hex[:8]
-        paths: dict[str, str] = {}
-        for name, df in datasets.items():
-            path = os.path.join(self.root, name, f"snap-{token}")
-            df.write.mode("overwrite").parquet(path)
-            paths[name] = path
+        paths = self._write({n: (df, []) for n, df in datasets.items()})
 
-        for _ in range(self.max_retries + 1):
-            v = self._latest_version()
-            m = self._read_manifest()
-            cur = (
-                next(s for s in m["snapshots"] if s["id"] == m["current"])
-                if m["current"]
-                else {"datasets": {}, "partitions": {}}
-            )
+        def update(m: dict, cur: dict) -> dict:
             merged: dict[str, str | list[str]] = dict(cur["datasets"])
             for name, path in paths.items():
                 merged[name] = _dirs(merged.get(name, [])) + [path]
-            sid = (m["current"] or 0) + 1
-            m["snapshots"].append(
-                {
-                    "id": sid,
-                    "datasets": merged,
-                    "committed_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                    "parent": m["current"],
-                    "meta": {"operation": "append", **(meta or {})},
-                    "partitions": dict(cur.get("partitions", {})),
-                }
-            )
-            m["current"] = sid
-            if self._try_publish(m, v + 1):
-                return sid
-        raise CommitConflictError(
-            f"append to {self.root} lost the metadata race "
-            f"{self.max_retries + 1} times"
-        )
+            return _next_snapshot(m, cur, merged, {"operation": "append", **(meta or {})})
+
+        return self._cas("append", update)["current"]
 
     def add_files(
         self,
@@ -260,48 +299,20 @@ class SnapshotTable:
         longer find its PATH referenced and would double-register; its
         KEY (``epoch-<id>``) survives the fold, keeping the sink
         exactly-once through compact/expire cycles."""
-        for _ in range(self.max_retries + 1):
-            v = self._latest_version()
-            m = self._read_manifest()
-            applied = m.setdefault("applied_keys", [])
-            if key is not None and f"{dataset}:{key}" in applied:
-                return m["current"]
-            cur = (
-                next(s for s in m["snapshots"] if s["id"] == m["current"])
-                if m["current"]
-                else {"datasets": {}, "partitions": {}}
-            )
+
+        def update(m: dict, cur: dict) -> dict | None:
+            if key is not None and f"{dataset}:{key}" in m.get("applied_keys", []):
+                return None
             have = _dirs(cur["datasets"].get(dataset, []))
             if path in have:
-                return m["current"]
-            if key is not None:
-                applied.append(f"{dataset}:{key}")
-                # bound metadata growth: a retry can only replay the
-                # in-flight (most recent) epochs, so a sliding window of
-                # applied keys is sufficient — same reasoning as
-                # Iceberg's bounded snapshot-summary history
-                if len(applied) > 10_000:
-                    m["applied_keys"] = applied[-10_000:]
-            sid = (m["current"] or 0) + 1
-            m["snapshots"].append(
-                {
-                    "id": sid,
-                    "datasets": {**cur["datasets"], dataset: have + [path]},
-                    "committed_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                    "parent": m["current"],
-                    "meta": {"operation": "add_files", "path": path, **(meta or {})},
-                    "partitions": dict(cur.get("partitions", {})),
-                }
+                return None
+            _record_keys(m, [] if key is None else [f"{dataset}:{key}"])
+            return _next_snapshot(
+                m, cur, {**cur["datasets"], dataset: have + [path]},
+                {"operation": "add_files", "path": path, **(meta or {})},
             )
-            m["current"] = sid
-            if self._try_publish(m, v + 1):
-                return sid
-        raise CommitConflictError(
-            f"add_files to {self.root} lost the metadata race "
-            f"{self.max_retries + 1} times"
-        )
+
+        return self._cas("add_files", update)["current"]
 
     def applied(self, dataset: str, key: str) -> bool:
         """Has an application key already been committed for a dataset?
@@ -343,53 +354,26 @@ class SnapshotTable:
         check covers the whole read-merge-write span, not just the
         write-publish gap (a racer landing between scan and write must
         conflict too, or its rows silently vanish)."""
-        token = uuid.uuid4().hex[:8]
-        path = os.path.join(self.root, dataset, f"snap-{token}")
-        df.write.mode("overwrite").parquet(path)
+        path = self._write({dataset: (df, [])})[dataset]
         if expected_dirs is not None:
             base_dirs = list(expected_dirs)
         else:
-            base = self._read_manifest()
-            base_cur = (
-                next(s for s in base["snapshots"] if s["id"] == base["current"])
-                if base["current"]
-                else {"datasets": {}}
-            )
-            base_dirs = _dirs(base_cur["datasets"].get(dataset, []))
-        for _ in range(self.max_retries + 1):
-            v = self._latest_version()
-            m = self._read_manifest()
-            cur = (
-                next(s for s in m["snapshots"] if s["id"] == m["current"])
-                if m["current"]
-                else {"datasets": {}, "partitions": {}}
-            )
+            base = _current(self._read_manifest())
+            base_dirs = _dirs(base["datasets"].get(dataset, []))
+
+        def update(m: dict, cur: dict) -> dict:
             if _dirs(cur["datasets"].get(dataset, [])) != base_dirs:
                 raise CommitConflictError(
                     f"concurrent writer changed dataset {dataset!r} under "
                     "this merge — re-read and re-merge (serializable "
                     "isolation: rebasing would drop their rows)"
                 )
-            sid = (m["current"] or 0) + 1
-            m["snapshots"].append(
-                {
-                    "id": sid,
-                    "datasets": {**cur["datasets"], dataset: path},
-                    "committed_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                    "parent": m["current"],
-                    "meta": {"operation": "replace_dataset", **(meta or {})},
-                    "partitions": dict(cur.get("partitions", {})),
-                }
+            return _next_snapshot(
+                m, cur, {**cur["datasets"], dataset: path},
+                {"operation": "replace_dataset", **(meta or {})},
             )
-            m["current"] = sid
-            if self._try_publish(m, v + 1):
-                return sid
-        raise CommitConflictError(
-            f"replace_dataset on {self.root} lost the metadata race "
-            f"{self.max_retries + 1} times"
-        )
+
+        return self._cas("replace_dataset", update)["current"]
 
     def add_files_many(
         self,
@@ -405,57 +389,27 @@ class SnapshotTable:
         double idempotency as ``add_files``: by path, and by ``key``
         recorded per dataset (all-or-nothing, since the publish is one
         CAS)."""
-        for _ in range(self.max_retries + 1):
-            v = self._latest_version()
-            m = self._read_manifest()
-            applied = m.setdefault("applied_keys", [])
-            if key is not None and all(
-                f"{ds}:{key}" in applied for ds in paths
-            ):
-                return m["current"]
-            cur = (
-                next(s for s in m["snapshots"] if s["id"] == m["current"])
-                if m["current"]
-                else {"datasets": {}, "partitions": {}}
-            )
+
+        def update(m: dict, cur: dict) -> dict | None:
+            applied = m.get("applied_keys", [])
+            keys = [] if key is None else [f"{ds}:{key}" for ds in paths]
+            keys = [k for k in keys if k not in applied]
+            if key is not None and not keys:
+                return None
             merged: dict[str, str | list[str]] = dict(cur["datasets"])
-            changed = False
             for ds, path in paths.items():
                 have = _dirs(merged.get(ds, []))
                 if path not in have:
                     merged[ds] = have + [path]
-                    changed = True
-                if key is not None and f"{ds}:{key}" not in applied:
-                    applied.append(f"{ds}:{key}")
-                    changed = True
-            if not changed:
-                return m["current"]
-            if len(applied) > 10_000:
-                m["applied_keys"] = applied[-10_000:]
-            sid = (m["current"] or 0) + 1
-            m["snapshots"].append(
-                {
-                    "id": sid,
-                    "datasets": merged,
-                    "committed_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                    "parent": m["current"],
-                    "meta": {
-                        "operation": "add_files",
-                        "paths": dict(paths),
-                        **(meta or {}),
-                    },
-                    "partitions": dict(cur.get("partitions", {})),
-                }
+            if not keys and merged == cur["datasets"]:
+                return None
+            _record_keys(m, keys)
+            return _next_snapshot(
+                m, cur, merged,
+                {"operation": "add_files", "paths": dict(paths), **(meta or {})},
             )
-            m["current"] = sid
-            if self._try_publish(m, v + 1):
-                return sid
-        raise CommitConflictError(
-            f"add_files_many to {self.root} lost the metadata race "
-            f"{self.max_retries + 1} times"
-        )
+
+        return self._cas("add_files_many", update)["current"]
 
     # -- maintenance (Iceberg table-maintenance equivalents) -----------------
     def compact(
@@ -507,56 +461,37 @@ class SnapshotTable:
             raise ValueError(f"snapshot {base['id']} has no dataset {dataset!r}")
         src = base["datasets"][dataset]
         part_cols = base.get("partitions", {}).get(dataset, [])
-        dst = os.path.join(self.root, dataset, f"snap-{uuid.uuid4().hex[:8]}")
         df = spark.read.parquet(*_dirs(src))
         if sort_by:
             df = df.repartitionByRange(max(1, target_files), *sort_by)
             df = df.sortWithinPartitions(*sort_by)
         else:
             df = df.coalesce(max(1, target_files))
-        w = df.write
-        if part_cols:
-            w = w.partitionBy(*part_cols)
-        w.mode("overwrite").parquet(dst)
+        dst = self._write({dataset: (df, part_cols)})[dataset]
 
-        for _ in range(self.max_retries + 1):
-            v = self._latest_version()
-            m = self._read_manifest()
-            cur = next(s for s in m["snapshots"] if s["id"] == m["current"])
+        def update(m: dict, cur: dict) -> dict:
             if cur["datasets"].get(dataset) != src:
-                shutil.rmtree(dst, ignore_errors=True)
                 raise CommitConflictError(
                     f"compact of {dataset!r} in {self.root}: dataset was "
                     f"replaced concurrently (expected {src}); retry against "
                     "the new snapshot"
                 )
-            sid = m["current"] + 1
-            m["snapshots"].append(
+            return _next_snapshot(
+                m, cur, {**cur["datasets"], dataset: dst},
                 {
-                    "id": sid,
-                    "datasets": {**cur["datasets"], dataset: dst},
-                    "committed_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                    "parent": m["current"],
-                    "meta": {
-                        "operation": "compact",
-                        "dataset": dataset,
-                        "source": src,
-                        "target_files": target_files,
-                        "sort_by": list(sort_by or []),
-                    },
-                    "partitions": dict(cur.get("partitions", {})),
-                }
+                    "operation": "compact",
+                    "dataset": dataset,
+                    "source": src,
+                    "target_files": target_files,
+                    "sort_by": list(sort_by or []),
+                },
             )
-            m["current"] = sid
-            if self._try_publish(m, v + 1):
-                return sid
-        shutil.rmtree(dst, ignore_errors=True)
-        raise CommitConflictError(
-            f"compact of {dataset!r} in {self.root} lost the metadata race "
-            f"{self.max_retries + 1} times"
-        )
+
+        try:
+            return self._cas(f"compact of {dataset!r}", update)["current"]
+        except CommitConflictError:
+            shutil.rmtree(dst, ignore_errors=True)
+            raise
 
     def expire_snapshots(self, keep_last: int = 1) -> list[int]:
         """Drop all but the last ``keep_last`` snapshots from table
@@ -571,35 +506,19 @@ class SnapshotTable:
         expired snapshot id raises ValueError, exactly like Iceberg
         time travel past the expiry horizon. Returns expired ids."""
         keep_last = max(1, keep_last)
-        for _ in range(self.max_retries + 1):
-            v = self._latest_version()
-            m = self._read_manifest()
-            if len(m["snapshots"]) <= keep_last:
-                return []
-            retained = m["snapshots"][-keep_last:]
-            expired = m["snapshots"][:-keep_last]
-            m["snapshots"] = retained
-            if self._try_publish(m, v + 1):
-                keep = {
-                    p
-                    for s in retained
-                    for v_ in s["datasets"].values()
-                    for p in _dirs(v_)
-                }
-                doomed = {
-                    p
-                    for s in expired
-                    for v_ in s["datasets"].values()
-                    for p in _dirs(v_)
-                    if p not in keep
-                }
-                for p in doomed:
-                    shutil.rmtree(p, ignore_errors=True)
-                return [s["id"] for s in expired]
-        raise CommitConflictError(
-            f"expire_snapshots on {self.root} lost the metadata race "
-            f"{self.max_retries + 1} times"
-        )
+        expired: list[dict] = []
+
+        def update(m: dict, cur: dict) -> dict | None:
+            expired[:] = m["snapshots"][:-keep_last]
+            if not expired:
+                return None
+            m["snapshots"] = m["snapshots"][-keep_last:]
+            return m
+
+        retained = self._cas("expire_snapshots", update)["snapshots"]
+        for p in _referenced(expired) - _referenced(retained):
+            shutil.rmtree(p, ignore_errors=True)
+        return [s["id"] for s in expired]
 
     def remove_orphans(self, older_than_sec: float = 3600.0) -> list[str]:
         """Delete data dirs referenced by NO snapshot in current
@@ -610,13 +529,7 @@ class SnapshotTable:
         writer's dirs are unreferenced until its publish, so only dirs
         older than ``older_than_sec`` are touched. Returns removed
         paths."""
-        m = self._read_manifest()
-        referenced = {
-            p
-            for s in m["snapshots"]
-            for v in s["datasets"].values()
-            for p in _dirs(v)
-        }
+        referenced = _referenced(self._read_manifest()["snapshots"])
         now = time.time()
         removed: list[str] = []
         for name in os.listdir(self.root):

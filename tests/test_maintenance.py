@@ -265,3 +265,117 @@ def test_stream_ingest_publishes_and_maintains_snapshots(spark, tmp_path):
     )
     assert t.current_snapshot() == cur
     assert {tuple(r) for r in t.scan(spark, "mentions").select(*cols).collect()} == want
+
+
+# -- the shared optimistic-commit loop, writer by writer ----------------------
+
+
+def _race_sibling_once(monkeypatch, spark, root: str) -> list[int]:
+    """Patch the CAS so that, inside the FIRST publish attempt, a
+    competitor appends to the sibling dataset ``side`` — claiming the
+    exact metadata version the writer under test is about to publish.
+    Returns the raced version(s)."""
+    orig = SnapshotTable._try_publish
+    raced: list[int] = []
+
+    def racing_publish(self, m, version):
+        if not raced:
+            raced.append(version)
+            SnapshotTable(root).append(
+                {"side": spark.range(100, 105).toDF("id")}, meta={"who": "competitor"}
+            )
+        return orig(self, m, version)
+
+    monkeypatch.setattr(SnapshotTable, "_try_publish", racing_publish)
+    return raced
+
+
+def _batch_dir(spark, tmp_path) -> str:
+    ext = str(tmp_path / "batch-000001")
+    spark.range(10, 20).toDF("id").write.parquet(ext)
+    return ext
+
+
+# writer -> (call, the rows of dataset "d" once it has published)
+_WRITERS = {
+    "append": (
+        lambda spark, t, tmp: t.append({"d": spark.range(10, 20).toDF("id")}),
+        range(20),
+    ),
+    "add_files": (
+        lambda spark, t, tmp: t.add_files("d", _batch_dir(spark, tmp), key="e1"),
+        range(20),
+    ),
+    "add_files_many": (
+        lambda spark, t, tmp: t.add_files_many({"d": _batch_dir(spark, tmp)}, key="e1"),
+        range(20),
+    ),
+    "replace_dataset": (
+        lambda spark, t, tmp: t.replace_dataset("d", spark.range(10, 20).toDF("id")),
+        range(10, 20),
+    ),
+    "compact": (
+        lambda spark, t, tmp: t.compact(spark, "d", target_files=1),
+        range(10),
+    ),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_WRITERS))
+def test_writer_rebases_on_lost_metadata_race(spark, tmp_path, monkeypatch, writer):
+    """Every writer shares one optimistic-commit loop: a competitor
+    publishing to a SIBLING dataset between the writer's metadata read
+    and its publish makes the CAS fail; the writer rebases onto the
+    competitor's snapshot and republishes — both changes visible,
+    nothing clobbered."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.commit({"d": spark.range(10).toDF("id"), "side": spark.range(3).toDF("id")})
+    raced = _race_sibling_once(monkeypatch, spark, t.root)
+    call, want_d = _WRITERS[writer]
+    sid = call(spark, t, tmp_path)
+    monkeypatch.undo()
+
+    assert raced == [2]  # the competitor took the writer's first version
+    assert sid == 3 == t.current_snapshot()
+    snaps = {s.id: s for s in t.snapshots()}
+    assert snaps[2].meta["who"] == "competitor" and snaps[3].parent == 2
+    assert _rows(t.scan(spark, "d")) == {(i,) for i in want_d}
+    assert _rows(t.scan(spark, "side")) == {(i,) for i in [*range(3), *range(100, 105)]}
+
+
+def test_expire_snapshots_rebases_on_lost_metadata_race(spark, tmp_path, monkeypatch):
+    """expire_snapshots publishes through the same loop: after losing
+    the race it expires against the competitor's metadata, so the
+    competitor's snapshot is the one retained and no dir it references
+    is deleted."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.commit({"d": spark.range(10).toDF("id"), "side": spark.range(3).toDF("id")})
+    t.append({"d": spark.range(10, 20).toDF("id")})
+    raced = _race_sibling_once(monkeypatch, spark, t.root)
+    expired = t.expire_snapshots(keep_last=1)
+    monkeypatch.undo()
+
+    assert raced == [3]
+    assert expired == [1, 2]
+    assert [s.id for s in t.snapshots()] == [3]
+    assert t.snapshots()[0].meta["who"] == "competitor"
+    assert _rows(t.scan(spark, "d")) == {(i,) for i in range(20)}
+    assert _rows(t.scan(spark, "side")) == {(i,) for i in [*range(3), *range(100, 105)]}
+
+
+def test_compact_exhausted_retries_removes_rewrite_dir(spark, tmp_path, monkeypatch):
+    """With ``max_retries=0`` one lost race exhausts the loop: compact
+    raises, the competitor's snapshot stays current, and the rewrite dir
+    is removed rather than left as an orphan."""
+    t = SnapshotTable(str(tmp_path / "t"), max_retries=0)
+    t.commit({"d": spark.range(10).toDF("id"), "side": spark.range(3).toDF("id")})
+    d_dir = t.snapshots()[0].datasets["d"]
+    _race_sibling_once(monkeypatch, spark, t.root)
+    with pytest.raises(CommitConflictError, match="lost the metadata race"):
+        t.compact(spark, "d", target_files=1)
+    monkeypatch.undo()
+
+    assert t.current_snapshot() == 2
+    assert t.snapshots()[-1].meta["who"] == "competitor"
+    assert os.listdir(os.path.dirname(d_dir)) == [os.path.basename(d_dir)]
+    assert t.remove_orphans(older_than_sec=0.0) == []

@@ -117,7 +117,7 @@ def test_merge_grouping_windows_share_one_sort(spark, docs_parquet):
     assert plan.count("+- Sort ") == 2
 
 
-def test_linking_top1_is_hash_agg_not_sort(spark, docs_parquet):
+def test_linking_top1_is_partial_min_by_single_exchange(spark, docs_parquet):
     docs = spark.read.schema(DOC_SCHEMA).parquet(docs_parquet)
     txt = text_spans(explode_spans(docs))
     from pie_spark.extract.fused import fused_matches

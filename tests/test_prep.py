@@ -206,3 +206,24 @@ def test_chunk_with_overlap_semantics(spark):
 
     with _pt.raises(ValueError):
         chunk_with_overlap(df, chunk_tokens=4, stride=5)
+
+
+def test_prep_drill_counts_committed_snapshots(spark, tmp_path):
+    """tools/prep_drill.py kills the job once ≥2 stage snapshots are
+    committed; its probe must read the table's published metadata, or
+    the kill branch never fires."""
+    import os
+    import sys
+
+    from pie_spark.io.snapshots import SnapshotTable
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(root, "tools"))
+    from prep_drill import _n_snapshots
+
+    ck = str(tmp_path / "ck")
+    assert _n_snapshots(ck) == 0  # not created yet
+    t = SnapshotTable(ck)
+    t.commit({"a": spark.range(3)})
+    t.commit({"b": spark.range(4)})
+    assert _n_snapshots(ck) == 2

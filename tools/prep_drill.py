@@ -32,6 +32,9 @@ import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from pie_spark.io.snapshots import SnapshotTable  # noqa: E402
 
 
 def _spark_submit(cores: int, args: list[str], capture: bool) -> subprocess.Popen:
@@ -62,16 +65,12 @@ def _run(cores: int, args: list[str]) -> dict:
 
 
 def _n_snapshots(ckpt_dir: str) -> int:
-    """Committed snapshot count from SnapshotTable's _manifest.json
-    (manifest-last commit protocol — the pointer IS the commit)."""
-    mf = os.path.join(ckpt_dir, "_manifest.json")
-    if not os.path.exists(mf):
+    """Committed snapshot count of the checkpoint table. Published
+    metadata is never torn (it is hard-linked into place only after
+    write+fsync), so polling it while the job commits is safe."""
+    if not os.path.isdir(ckpt_dir):  # job has not created it yet
         return 0
-    try:
-        with open(mf) as f:
-            return len(json.load(f).get("snapshots", []))
-    except (json.JSONDecodeError, OSError):
-        return 0  # mid-rename race: treat as not yet committed
+    return len(SnapshotTable(ckpt_dir).snapshots())
 
 
 def _manifest_hash(path: str) -> tuple[int, str]:
