@@ -34,15 +34,15 @@ def main() -> None:
     p.add_argument("--no-crf", action="store_true")
     p.add_argument("--dict-max-surfaces", type=int, default=5_000_000,
                    help="broadcast cap; a bigger dictionary switches to the "
-                        "dictionary-scale gazetteer + salted linking "
+                        "dictionary-scale gazetteer + salted J1/J4 joins "
                         "(dict_mode recorded in lineage)")
     p.add_argument("--hot-keys-from", default="",
                    help="streaming-counter output dir (streaming/counters.py "
-                        "landing zone); its top --hot-k norm_keys seed J6/CC "
-                        "salting instead of the batch A4 scan — a standing "
-                        "landing zone learns hot entities across runs. "
-                        "Triples are identical either way (salting is "
-                        "result-preserving for any hot list).")
+                        "landing zone); its top --hot-k norm_keys seed the "
+                        "shard fallback's J1/J4 salting instead of the batch "
+                        "A4 scan — a standing landing zone learns hot "
+                        "entities across runs. Triples are identical either "
+                        "way (salting is result-preserving for any hot list).")
     args = p.parse_args()
 
     from pyspark.sql import SparkSession

@@ -28,8 +28,6 @@ Scale design (10^12-doc design point, BASELINE.json:14):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -163,7 +161,6 @@ def union_find(edge_rows: list[tuple[str, str]]) -> dict[str, str]:
 def adaptive_components(
     spark: SparkSession,
     edges: DataFrame,
-    hot_nodes: list[str] | Callable[[], list[str]] = (),
     salt_k: int = 8,
     max_iters: int = 20,
     driver_max_edges: int = 5_000_000,
@@ -202,12 +199,6 @@ def adaptive_components(
     what skews, and AQE's split caps out before per-sibling
     parallelism does). Below the threshold nothing is salted and the
     loop runs clean. The collect is limit(``hot_max``)-bounded.
-
-    ``hot_nodes`` (list or thunk) remains as explicit extra seeds for
-    callers that already know their hubs; pass ``hot_degree_min=0`` to
-    skip the measurement and salt exactly the caller list (legacy
-    behavior). A thunk is only invoked when measurement is disabled —
-    its Spark job is what the degree probe replaces.
     """
     if driver_max_edges > 0:
         # ONE job: Arrow-collect at most N+1 rows (plain strings, not Row
@@ -222,25 +213,20 @@ def adaptive_components(
             return local_frame(spark, LABEL_SCHEMA, [nodes, [labels[n] for n in nodes]])
     from pie_spark.canon.salting import salt_edges, strip_salted_nodes
 
-    if hot_degree_min > 0:
-        # measured hubs: ONE partial-agg pass (undirected degree), a
-        # bounded collect of at most hot_max node ids
-        ends = edges.select(F.col("src").alias("node")).union(
-            edges.select(F.col("dst").alias("node"))
-        )
-        measured = [
-            r["node"]
-            for r in ends.groupBy("node")
-            .count()
-            .filter(F.col("count") >= hot_degree_min)
-            .orderBy(F.desc("count"), "node")
-            .limit(hot_max)
-            .collect()
-        ]
-        seeds = hot_nodes if not callable(hot_nodes) else ()
-        hot = sorted(set(measured) | set(seeds))
-    else:
-        hot = list(hot_nodes() if callable(hot_nodes) else hot_nodes)
+    # measured hubs: ONE partial-agg pass (undirected degree), a
+    # bounded collect of at most hot_max node ids
+    ends = edges.select(F.col("src").alias("node")).union(
+        edges.select(F.col("dst").alias("node"))
+    )
+    hot = sorted(
+        r["node"]
+        for r in ends.groupBy("node")
+        .count()
+        .filter(F.col("count") >= hot_degree_min)
+        .orderBy(F.desc("count"), "node")
+        .limit(hot_max)
+        .collect()
+    )
     salted = salt_edges(edges, hot, salt_k)
     return strip_salted_nodes(connected_components(salted, max_iters))
 

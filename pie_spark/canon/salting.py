@@ -3,13 +3,16 @@ BASELINE.json:14 — "skew mitigation via key salting on hot entities").
 
 Two tools:
 
-* :func:`salted_join` — generic hot-key salted equi-join: the fact side
-  spreads each hot key over K salts (deterministically, by hashing a
-  caller-chosen spread column — never ``rand()``, determinism rule
-  §5.4); the dim side replicates hot keys ×K. Non-hot keys pay nothing
-  (salt 0, no replication). Use when the dim side is too large to
-  broadcast; AQE skew-join remains the backstop for joins, but AQE
-  does NOT cover groupBy or iterated self-joins — this does.
+* :func:`salted_join` — the dictionary-side equi-join of J1 linking and
+  J4 canonical attach, broadcast or salted by one value per run.
+  ``hot=None`` is the broadcast hash join (the dictionary fits the
+  driver). A list is the shuffle join for a dictionary too large to
+  broadcast: the fact side spreads each hot key over K salts
+  (deterministically, by hashing a caller-chosen spread column — never
+  ``rand()``, determinism rule §5.4); the dim side replicates hot keys
+  ×K. Non-hot keys pay nothing (salt 0, no replication). AQE skew-join
+  remains the backstop for joins, but AQE does NOT cover groupBy or
+  iterated self-joins — this does.
 
 * :func:`salt_edges` — CC-specific node splitting: a hot node v is
   split into K star-connected siblings ``v#<i>``; each incident edge
@@ -34,10 +37,12 @@ def salted_join(
     dim: DataFrame,
     key: str,
     spread_col: str,
-    hot: list[str],
+    hot: list[str] | None,
     salt_k: int,
     how: str = "inner",
 ) -> DataFrame:
+    if hot is None:
+        return fact.join(F.broadcast(dim), key, how)
     if not hot or salt_k <= 1:
         return fact.join(dim, key, how)
     is_hot_f = F.col(key).isin(hot)
@@ -56,23 +61,23 @@ def salted_join(
     return fact2.join(dim2, [key, "_salt"], how).drop("_salt")
 
 
-def salt_edges(edges: DataFrame, hot_nodes: list[str], salt_k: int) -> DataFrame:
+def salt_edges(edges: DataFrame, hubs: list[str], salt_k: int) -> DataFrame:
     """Split hot nodes into K star-connected siblings (see module doc)."""
-    if not hot_nodes or salt_k <= 1:
+    if not hubs or salt_k <= 1:
         return edges
     sib = lambda node, spread: F.concat(  # noqa: E731
         node, F.lit("#"), F.pmod(F.xxhash64(spread), F.lit(salt_k)).cast("string")
     )
     retarget = edges.select(
-        F.when(F.col("src").isin(hot_nodes), sib(F.col("src"), F.col("dst")))
+        F.when(F.col("src").isin(hubs), sib(F.col("src"), F.col("dst")))
         .otherwise(F.col("src"))
         .alias("src"),
-        F.when(F.col("dst").isin(hot_nodes), sib(F.col("dst"), F.col("src")))
+        F.when(F.col("dst").isin(hubs), sib(F.col("dst"), F.col("src")))
         .otherwise(F.col("dst"))
         .alias("dst"),
     )
     hot_df = local_frame(
-        edges.sparkSession, T.StructType([T.StructField("node", T.StringType())]), [hot_nodes]
+        edges.sparkSession, T.StructType([T.StructField("node", T.StringType())]), [hubs]
     )
     star = hot_df.select(
         F.col("node").alias("src"),

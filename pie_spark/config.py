@@ -38,8 +38,9 @@ class PipelineConfig:
     # hit-identical. Raise with corpus size (group ≈ docs_with_char /
     # shard_salt_parts).
     shard_salt_parts: int = 8
-    # pre-computed hot norm_keys for J6/CC salting (VERDICT r05 next#7:
-    # the streaming counters' hot_keys_from_counts output, via the CLI's
+    # pre-computed hot norm_keys for the J1 linking and J4 canonical-
+    # attach salting of the shard-fallback path (VERDICT r05 next#7: the
+    # streaming counters' hot_keys_from_counts output, via the CLI's
     # --hot-keys-from). Non-empty → downstream_stage SKIPS the batch A4
     # scan over the mention set and salts on this list instead — a
     # standing landing zone learns its hot entities incrementally across

@@ -63,14 +63,6 @@ def shingles_of(toks: Column, n: int = 3) -> Column:
     )
 
 
-def shingle_array(text_col: str = "text", n: int = 3) -> Column:
-    """Single-expression form — ONLY for one-shot projections where the
-    consumer immediately reduces the array (e.g. fingerprints' min).
-    Prefer :func:`doc_shingle_arrays` / :func:`doc_shingles` everywhere
-    else: this form re-evaluates the tokenization per element."""
-    return shingles_of(F.split(norm_text(text_col), " "), n)
-
-
 def doc_shingle_arrays(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     """(doc_id, sh: array<string>). NOTE: Project-over-Project shapes
     can still be collapsed by Catalyst (re-inlining the tokenization

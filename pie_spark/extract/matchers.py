@@ -21,9 +21,6 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 SSN_RE = r"\b\d{3}-\d{2}-\d{4}\b"
 PHONE_RE = r"\([2-9]\d{2}\) [2-9]\d{2}-\d{4}"
@@ -84,19 +81,3 @@ def find_matches(text: str, enable_phone: bool = True) -> list[dict]:
         )
     return out
 
-
-def email_matches_native(text_spans: DataFrame) -> DataFrame:
-    """M1 native fast path: EMAIL-only extraction with zero Python —
-    ``regexp_extract_all`` stays inside WholeStageCodegen. Used by the
-    oracle-checked query surface (offsets not needed there); the full
-    pipeline gets offsets from the fused detector (extract/fused.py)."""
-    return (
-        text_spans.select(
-            "doc_id",
-            "span_idx",
-            F.explode(
-                F.regexp_extract_all("text", F.lit(f"(^| )({EMAIL_RE})"), 2)
-            ).alias("surface"),
-        )
-        .withColumn("mention_type", F.lit("EMAIL"))
-    )

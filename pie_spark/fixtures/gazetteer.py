@@ -146,13 +146,3 @@ def golden_canonical_map() -> dict[str, str]:
         for e in dictionary_entries()
     }
 
-
-def linker_top1(norm_key: str) -> str | None:
-    """Golden linking rule: among dictionary entries with this norm_key,
-    pick by (prior desc, entity_id asc). Mirrors J2's window rank; used
-    only for golden-triple construction on planted mentions."""
-    cands = [e for e in dictionary_entries() if e.norm_key == norm_key]
-    if not cands:
-        return None
-    best = min(cands, key=lambda e: (-e.prior, e.entity_id))
-    return best.entity_id

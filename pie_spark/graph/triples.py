@@ -47,23 +47,17 @@ def _with_canon(
     key_map: DataFrame,
     hot: list[str] | None = None,
     salt_k: int = 1,
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """J4: attach canonical entity ids to linked person mentions.
 
-    Fast path broadcasts the (small, dictionary-derived) canonical map.
-    When the dictionary is too large to broadcast — the 10^12-doc
-    design point can carry billion-key dictionaries — the caller flips
-    ``broadcast_dim=False`` and the join runs shuffle-side with
-    explicit hot-key salting (J6), spread by mention_id.
+    ``hot=None`` broadcasts the (small, dictionary-derived) canonical
+    map. When the dictionary is too large to broadcast — the 10^12-doc
+    design point can carry billion-key dictionaries — the caller passes
+    the same ``hot`` list J1 linking got and the join runs shuffle-side
+    with explicit hot-key salting (J6), spread by mention_id.
     """
     dim = key_map.select("norm_key", "canon_entity_id")
-    if broadcast_dim:
-        return linked.join(F.broadcast(dim), "norm_key", "inner")
-    return salted_join(
-        linked, dim, key="norm_key", spread_col="mention_id",
-        hot=hot or [], salt_k=salt_k, how="inner",
-    )
+    return salted_join(linked, dim, "norm_key", "mention_id", hot, salt_k)
 
 
 def mention_triples(linked_canon: DataFrame) -> DataFrame:

@@ -4,8 +4,11 @@ broadcast dictionary").
 
 J1 is an explicit ``F.broadcast`` hash join on the normalized surface
 key — the dictionary is the known-small side, so we never let the
-planner consider a shuffle join for it. Scoring (J2) is pure native
-column arithmetic (exact-match + token-set Jaccard + popularity prior).
+planner consider a shuffle join for it — unless the run found the
+dictionary too large to broadcast, when it is the salted shuffle join
+(J6); both are :func:`pie_spark.canon.salting.salted_join`. Scoring
+(J2) is pure native column arithmetic (exact-match + token-set Jaccard
++ popularity prior).
 
 Top-1 per mention (W1) is a ``min_by`` aggregation keyed by the
 total-order struct (-score, entity_id) — not a row_number window. The
@@ -23,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pie_spark.canon.salting import salted_join
 from pie_spark.extract.normalize import norm_key
 
 W_EXACT, W_JACCARD, W_PRIOR = 0.4, 0.3, 0.3
@@ -31,7 +35,6 @@ W_EXACT, W_JACCARD, W_PRIOR = 0.4, 0.3, 0.3
 def link_mentions(
     mentions: DataFrame,
     dict_df: DataFrame,
-    broadcast_dict: bool = True,
     hot: list[str] | None = None,
     salt_k: int = 1,
 ) -> DataFrame:
@@ -42,10 +45,11 @@ def link_mentions(
     (they contribute no MENTIONS/HAS_* triples — G3 trusts linked
     persons only).
 
-    ``broadcast_dict=False`` is the oversized-dictionary path (VERDICT
-    r03 next#8): J1 becomes a salted shuffle join (J6) — ``hot``
-    norm_keys spread ``salt_k`` ways with mention_id as the spread
-    column; AQE skew-join remains the backstop for keys A4 missed.
+    ``hot=None`` broadcasts the dictionary. A list is the
+    oversized-dictionary path (VERDICT r03 next#8): J1 becomes a salted
+    shuffle join (J6) — ``hot`` norm_keys spread ``salt_k`` ways with
+    mention_id as the spread column; AQE skew-join remains the backstop
+    for keys A4 missed.
     """
     m = mentions.filter(F.col("mention_type") == "PERSON").withColumn(
         "norm_key", norm_key("surface")
@@ -57,14 +61,7 @@ def link_mentions(
         "entity_type",
         "prior",
     )
-    if broadcast_dict:
-        cand = m.join(F.broadcast(d), "norm_key", "inner")
-    else:
-        from pie_spark.canon.salting import salted_join
-
-        cand = salted_join(
-            m, d, "norm_key", "mention_id", hot or [], salt_k, how="inner"
-        )
+    cand = salted_join(m, d, "norm_key", "mention_id", hot, salt_k)
 
     m_toks = F.split(F.lower("surface"), " ")
     d_toks = F.split(F.lower("dict_surface"), " ")

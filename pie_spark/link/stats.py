@@ -2,9 +2,12 @@
 
 Native hash aggregations — Spark performs partial (map-side) + final
 aggregation automatically, so hot surfaces do not skew these ops even
-at 10^12 docs. The top-k hot list (A4) is the *only* data collected to
-the driver in the whole pipeline (bounded at k rows), feeding the J6
-salting decision.
+at 10^12 docs. The top-k hot list (A4) is a driver collect bounded at
+k rows; it picks the keys that the oversized-dictionary path salts in
+J1 linking and J4 canonical attach. The pipeline's other driver
+collects are bounded the same way: the dictionary-surface probe
+(``pipeline.try_collect_surfaces``) and the CC edge collect
+(``canon.cc.adaptive_components``).
 """
 
 from __future__ import annotations
@@ -26,16 +29,6 @@ def surface_frequencies(mentions: DataFrame) -> DataFrame:
             F.countDistinct("doc_id").alias("n_docs"),
         )
     )
-
-
-def approx_surface_cardinality(mentions: DataFrame) -> int:
-    """A2: HLL estimate of distinct person surfaces (planning metric)."""
-    row = (
-        mentions.filter(F.col("mention_type") == "PERSON")
-        .agg(F.approx_count_distinct(norm_key("surface")).alias("n"))
-        .collect()[0]
-    )
-    return int(row["n"])
 
 
 def hot_keys(freqs: DataFrame, k: int) -> list[str]:

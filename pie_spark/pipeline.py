@@ -57,23 +57,15 @@ def try_collect_surfaces(dict_df: DataFrame, max_surfaces: int) -> list[str] | N
 
 @dataclass
 class PipelineResult:
-    """All intermediate + final frames of one pipeline run.
+    """The frames a pipeline run leaves persisted, plus the one
+    dictionary-size decision of the run: ``dict_mode`` is "broadcast",
+    or "shard_fallback" when the dictionary is over
+    ``cfg.dict_max_surfaces`` (shard gazetteer, salted J1 and J4)."""
 
-    ``hot`` is computed lazily: hot-key detection costs a Spark job over
-    the mention set and only matters on the distributed-CC path, so on
-    the driver union-find fast path (dictionary-scale graphs — the
-    common case) it stays ``[]`` even when skewed keys exist. Read it as
-    "hot keys the run actually salted", not "no skew detected"."""
-
-    docs: DataFrame
-    spans: DataFrame
     merged_mentions: DataFrame
     linked: DataFrame
-    labels: DataFrame
     triples: DataFrame
-    hot: list[str]
-    # "broadcast", or "shard_fallback" (oversized dict)
-    dict_mode: str = "broadcast"
+    dict_mode: str
 
     def unpersist(self) -> None:
         self.merged_mentions.unpersist()
@@ -86,33 +78,31 @@ def extract_stage(
     cfg: PipelineConfig,
     docs: DataFrame,
     dict_df: DataFrame,
-    mode_out: dict | None = None,
-) -> DataFrame:
-    """Explode + all detectors + overlap-merge → mention rows. This is
-    the checkpointable unit: its output is deterministic per doc, so a
-    resumed run unions checkpointed mentions with fresh ones and gets a
-    byte-identical downstream (SURVEY.md §5.1 resume test).
+) -> tuple[DataFrame, str]:
+    """Explode + all detectors + overlap-merge → ``(mentions,
+    dict_mode)``. This is the checkpointable unit: its output is
+    deterministic per doc, so a resumed run unions checkpointed mentions
+    with fresh ones and gets a byte-identical downstream (SURVEY.md §5.1
+    resume test).
 
     Dictionary-size adaptivity (VERDICT r03 next#8): when the distinct
     surface count exceeds ``cfg.dict_max_surfaces``, the in-UDF
     Aho-Corasick gazetteer degrades to the dictionary-shard trie probe
     (exact automaton parity) instead of raising — the dictionary never
     touches the driver; regex+CRF still run in the one fused Arrow
-    pass. ``mode_out`` (if passed) receives ``{"dict_mode":
-    "broadcast" | "shard_fallback"}`` so runners can record the
-    decision in lineage."""
+    pass. ``dict_mode`` ("broadcast" | "shard_fallback") is that
+    decision, taken here once per run and handed to
+    :func:`downstream_stage` and the checkpoint meta."""
     txt = text_spans(explode_spans(docs))
     surfaces = try_collect_surfaces(dict_df, cfg.dict_max_surfaces)
-    if mode_out is not None:
-        mode_out["dict_mode"] = "broadcast" if surfaces is not None else "shard_fallback"
     fused = fused_matches(
         txt, spark, surfaces or [],
         enable_phone=cfg.enable_phone, enable_crf=cfg.enable_crf,
     )
     if surfaces is None:
         gaz = gazetteer_shard_matches(txt, dict_df, salt_parts=cfg.shard_salt_parts)
-        return merge_mentions(fused, gaz)
-    return merge_mentions(fused)
+        return merge_mentions(fused, gaz), "shard_fallback"
+    return merge_mentions(fused), "broadcast"
 
 
 def downstream_stage(
@@ -121,41 +111,27 @@ def downstream_stage(
     docs: DataFrame,
     merged: DataFrame,
     dict_df: DataFrame,
-    dict_mode: str = "broadcast",
+    dict_mode: str,
 ) -> PipelineResult:
     """Everything after mention extraction: linking, CC canonicalization,
     triple materialization. ``merged`` may come fresh or from a
-    checkpoint snapshot. Any non-"broadcast" ``dict_mode`` switches J1
-    from the broadcast hash join to the salted shuffle join (J6) — the
-    oversized-dictionary path, salted on the A4 hot keys."""
-    spans = explode_spans(docs)
+    checkpoint snapshot. ``dict_mode`` becomes one ``hot`` value shared
+    by both dictionary joins, J1 linking and J4 canonical attach:
+    ``None`` (broadcast hash join) in "broadcast" mode, else the salted
+    shuffle join (J6) on ``cfg.hot_norm_keys`` — streamed counters via
+    the CLI's --hot-keys-from — or, when that is empty, the batch A4
+    hot list over the mention set."""
     # media branch carries only (doc_id, media_ref) past the explode;
     # the parquet ReadSchema still includes spans.text (no nested
     # pruning through the array explode — see media_refs)
     med = media_refs(docs)
 
-    # Hot keys for J6 link salting on the fallback path —
-    # cfg.hot_norm_keys (streamed counters via CLI --hot-keys-from)
-    # preempts the batch A4 scan. CC no longer consumes this list:
-    # adaptive_components salts from its own measured degree stats
-    # (r06 — the A4 mention-frequency list was a proxy for graph
-    # degree; the degree probe is exact and costs about the same).
-    hot: list[str] = list(cfg.hot_norm_keys)
-
+    # CC does not read this list: adaptive_components salts from its
+    # own measured degree stats
+    hot = None
     if dict_mode != "broadcast":
-        # oversized dictionary: J1 cannot broadcast — salted shuffle
-        # join (J6) on the hot norm_keys: streamed counters when seeded,
-        # else one batch A4 scan over the mention set. (r06 fix: a
-        # seeded hot list used to skip this whole branch and broadcast
-        # the oversized dictionary anyway — value-equal, so tests were
-        # green, but it reintroduced the OOM the fallback exists for.)
-        if not hot:
-            hot.extend(hot_keys(surface_frequencies(merged), cfg.hot_k))
-        linked = link_mentions(
-            merged, dict_df, broadcast_dict=False, hot=hot, salt_k=cfg.salt_k
-        )
-    else:
-        linked = link_mentions(merged, dict_df)
+        hot = list(cfg.hot_norm_keys) or hot_keys(surface_frequencies(merged), cfg.hot_k)
+    linked = link_mentions(merged, dict_df, hot=hot, salt_k=cfg.salt_k)
 
     labels = adaptive_components(
         spark,
@@ -166,19 +142,14 @@ def downstream_stage(
     )
     key_map = key_canonical_map(labels)
 
-    linked_canon = _with_canon(linked, key_map).persist(StorageLevel.MEMORY_AND_DISK)
+    linked_canon = _with_canon(linked, key_map, hot=hot, salt_k=cfg.salt_k).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     triples = all_triples(med, linked_canon, merged, cfg.pii_types).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     return PipelineResult(
-        docs=docs,
-        spans=spans,
-        merged_mentions=merged,
-        linked=linked_canon,
-        labels=labels,
-        triples=triples,
-        hot=hot,
-        dict_mode=dict_mode,
+        merged_mentions=merged, linked=linked_canon, triples=triples, dict_mode=dict_mode
     )
 
 
@@ -188,12 +159,9 @@ def run(
     docs: DataFrame,
     dict_df: DataFrame,
 ) -> PipelineResult:
-    """Fresh end-to-end run (no checkpointing — see
-    pie_spark.runner.run_checkpointed for the resumable path)."""
-    mode: dict = {}
-    merged = extract_stage(spark, cfg, docs, dict_df, mode_out=mode).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    return downstream_stage(
-        spark, cfg, docs, merged, dict_df, dict_mode=mode.get("dict_mode", "broadcast")
-    )
+    """Fresh end-to-end run: :func:`pie_spark.runner.run_checkpointed`
+    with whatever checkpoint / output the config names (none by
+    default, so nothing is written)."""
+    from pie_spark.runner import run_checkpointed
+
+    return run_checkpointed(spark, cfg, docs, dict_df).result

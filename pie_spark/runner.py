@@ -3,9 +3,14 @@
 snapshot checkpoints with per-partition lineage rows and extraction
 metrics").
 
+The one pipeline driver: ``pipeline.run`` is this function's
+``.result`` under a config that names no checkpoint or output, so
+steps 1 and 3 write nothing.
+
 Run shape:
-  1. extract stage → mention rows, committed to the checkpoint table
-     as snapshot {mentions, docs_done} (atomic, manifest-last);
+  1. extract stage → mention rows + the run's ``dict_mode``, committed
+     to the checkpoint table as snapshot {mentions, docs_done} with
+     ``dict_mode`` in its meta (atomic, manifest-last);
   2. downstream (link / CC / triples);
   3. triples + per-partition lineage committed to the output table in
      ONE snapshot, bucketed on doc_id (S5).
@@ -54,34 +59,27 @@ def run_checkpointed(
     resumed_docs = None
     extract_sid = None
 
-    mode: dict = {}
     if ckpt is not None and cfg.resume and ckpt.current_snapshot() is not None:
         done_docs = ckpt.scan(spark, "docs_done")
         done_mentions = ckpt.scan(spark, "mentions")
         todo = resume_delta(docs, done_docs)
         resumed_docs = todo.count()
+        extract_sid = ckpt.current_snapshot()
         if resumed_docs == 0:
             # fully-covered checkpoint: skip the (empty) fresh-extract
-            # branch entirely — no Python stage, no union
+            # branch entirely — no Python stage, no union — and take
+            # dict_mode from the snapshot that recorded the probe, never
+            # a "broadcast" default that would F.broadcast() the very
+            # dictionary the shard fallback keeps off the driver
             merged = done_mentions
+            dict_mode = ckpt.meta(extract_sid)["dict_mode"]
         else:
-            fresh = extract_stage(spark, cfg, todo, dict_df, mode_out=mode)
+            fresh, dict_mode = extract_stage(spark, cfg, todo, dict_df)
             merged = done_mentions.unionByName(fresh)
-        extract_sid = ckpt.current_snapshot()
-        # Recover dict_mode from the extract snapshot's meta (ADVICE
-        # r04): a fully-covered resume never re-probes the dictionary,
-        # and defaulting to "broadcast" would hand downstream_stage an
-        # F.broadcast() on the very dictionary the shard fallback exists
-        # to keep off the driver. Partial resumes re-probe in
-        # extract_stage; setdefault keeps that (identical) answer.
-        mode.setdefault(
-            "dict_mode", ckpt.meta(extract_sid).get("dict_mode", "broadcast")
-        )
     else:
-        merged = extract_stage(spark, cfg, docs, dict_df, mode_out=mode)
+        merged, dict_mode = extract_stage(spark, cfg, docs, dict_df)
 
     merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
-    dict_mode = mode.get("dict_mode", "broadcast")
 
     if ckpt is not None and extract_sid is None:
         extract_sid = ckpt.commit(
@@ -108,6 +106,6 @@ def run_checkpointed(
         out_sid = write_triples(
             out, res.triples, lineage, cfg.buckets,
             meta={"run_id": run_id, "input_snapshot": input_snapshot,
-                  "extract_snapshot": extract_sid, "dict_mode": res.dict_mode},
+                  "extract_snapshot": extract_sid, "dict_mode": dict_mode},
         )
     return RunOutput(res, run_id, extract_sid, out_sid, resumed_docs)

@@ -78,9 +78,8 @@ def stream_extract_mentions(
         n_batches += 1
         out = os.path.join(output_dir, f"batch-{epoch_id:06d}")
         # overwrite per-epoch directory = idempotent on retry
-        extract_stage(spark, cfg, batch_df, dict_df).write.mode(
-            "overwrite"
-        ).parquet(out)
+        mentions, _ = extract_stage(spark, cfg, batch_df, dict_df)
+        mentions.write.mode("overwrite").parquet(out)
         if snapshot_table is not None:
             snapshot_table.add_files(
                 "mentions", out, meta={"epoch": epoch_id}, key=f"epoch-{epoch_id}"

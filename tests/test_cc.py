@@ -87,9 +87,9 @@ def test_adaptive_cc_driver_path_matches_distributed(spark):
     pairs = [(r["src"], r["dst"]) for r in edges.collect()]
     want = _unionfind(pairs)
     assert union_find(pairs) == want
-    driver = adaptive_components(spark, edges, [], 1, driver_max_edges=10**6)
+    driver = adaptive_components(spark, edges, salt_k=1, driver_max_edges=10**6)
     assert {r["node"]: r["component"] for r in driver.collect()} == want
-    dist = adaptive_components(spark, edges, [], 1, driver_max_edges=0)
+    dist = adaptive_components(spark, edges, salt_k=1, driver_max_edges=0)
     assert {r["node"]: r["component"] for r in dist.collect()} == want
 
 
@@ -98,7 +98,7 @@ def test_adaptive_cc_falls_back_when_oversized(spark):
 
     pairs = [("a", "b"), ("b", "c"), ("x", "y")]
     edges = spark.createDataFrame(pairs, ["src", "dst"])
-    labels = adaptive_components(spark, edges, [], 1, driver_max_edges=2)
+    labels = adaptive_components(spark, edges, salt_k=1, driver_max_edges=2)
     _assert_matches_unionfind(spark, pairs, labels)
 
 
@@ -152,7 +152,7 @@ def test_adaptive_cc_measured_degree_salting(spark):
     """r06: the distributed path salts hubs it MEASURES (degree probe ≥
     hot_degree_min) instead of trusting a caller list. A planted hub
     over the threshold must come back with the same labels as
-    union-find, and explicit seeds still merge in."""
+    union-find."""
     from pie_spark.canon.cc import adaptive_components
 
     pairs = [("hub", f"l{i:03d}") for i in range(50)] + [
@@ -161,20 +161,9 @@ def test_adaptive_cc_measured_degree_salting(spark):
     edges = spark.createDataFrame(pairs, ["src", "dst"])
     # hub degree 50 ≥ threshold 40 → salted from measurement alone
     labels = adaptive_components(
-        spark, edges, [], salt_k=4, driver_max_edges=0, hot_degree_min=40
+        spark, edges, salt_k=4, driver_max_edges=0, hot_degree_min=40
     )
     _assert_matches_unionfind(spark, pairs, labels)
-    # explicit seed below the measured threshold merges with measurement
-    labels2 = adaptive_components(
-        spark, edges, ["x"], salt_k=4, driver_max_edges=0, hot_degree_min=40
-    )
-    _assert_matches_unionfind(spark, pairs, labels2)
-    # hot_degree_min=0 → legacy: salt exactly the caller list (thunk ok)
-    labels3 = adaptive_components(
-        spark, edges, lambda: ["hub"], salt_k=4, driver_max_edges=0,
-        hot_degree_min=0,
-    )
-    _assert_matches_unionfind(spark, pairs, labels3)
 
 
 def _assert_incremental_matches_full(spark, old_pairs, delta_pairs, **kw):

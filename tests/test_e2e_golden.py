@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from pie_spark.config import PipelineConfig
 from pie_spark.eval.prf import score
 from pie_spark.extract.invariants import violations
+from pie_spark.extract.spans import explode_spans
 from pie_spark.fixtures.gen import entity_dict_df, golden_triples, interleaved_docs
 from pie_spark.pipeline import run
 
@@ -28,8 +29,9 @@ def test_prf_gate(spark, result):
     assert prf.recall >= 0.95, prf
 
 
-def test_span_invariant(spark, result):
-    assert violations(result.docs, result.spans) == 0
+def test_span_invariant(spark):
+    docs = interleaved_docs(spark, SF_DIR)
+    assert violations(docs, explode_spans(docs)) == 0
 
 
 def test_all_predicates_emitted(result):

@@ -224,3 +224,32 @@ def test_runner_records_dict_mode_in_lineage(spark, tmp_path):
     meta = SnapshotTable(cfg.output_path).snapshots()[-1].meta
     assert meta["dict_mode"] == "shard_fallback"
     out.result.unpersist()
+
+
+def test_shard_fallback_triples_plan_has_no_broadcast(spark):
+    """Past dict_max_surfaces the dictionary stays off the driver in BOTH
+    dictionary joins: with auto-broadcast off, the triples plan holds no
+    BroadcastExchange — J1 linking and J4 canonical attach are salted
+    shuffle joins, not a forced broadcast of a dictionary-sized map."""
+    import contextlib
+    import io
+
+    from pie_spark.config import PipelineConfig
+    from pie_spark.fixtures.gen import entity_dict_df, interleaved_docs
+    from pie_spark.pipeline import run
+
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        docs = interleaved_docs(spark, SF_DIR).limit(40).localCheckpoint(eager=True)
+        res = run(spark, PipelineConfig(dict_max_surfaces=10), docs, entity_dict_df(spark))
+        assert res.dict_mode == "shard_fallback"
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            res.triples.explain("formatted")
+        assert "SortMergeJoin" in buf.getvalue()
+        assert "BroadcastExchange" not in buf.getvalue()
+        res.unpersist()
+    finally:
+        spark.conf.set(conf, prev)

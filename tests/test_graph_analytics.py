@@ -355,7 +355,7 @@ def test_entity_comention_graph_from_pipeline_mentions(spark):
     from pie_spark.text.colloc import mention_comention_edges
 
     docs = interleaved_docs(spark, "/root/testdata/sf0.001")
-    mentions = extract_stage(spark, PipelineConfig(), docs, entity_dict_df(spark))
+    mentions, _ = extract_stage(spark, PipelineConfig(), docs, entity_dict_df(spark))
     edges = mention_comention_edges(mentions, min_pair_docs=2)
     got = sorted((r.src, r.dst) for r in edges.collect())
     assert got, "entity co-mention graph is empty"

@@ -252,7 +252,7 @@ def test_stream_ingest_publishes_and_maintains_snapshots(spark, tmp_path):
         snapshot_table=t, maintain_every=2, maintain_max_files=4,
     )
     assert n >= 2
-    want = {tuple(r) for r in extract_stage(spark, cfg, docs, d).select(*cols).collect()}
+    want = {tuple(r) for r in extract_stage(spark, cfg, docs, d)[0].select(*cols).collect()}
     got = {tuple(r) for r in t.scan(spark, "mentions").select(*cols).collect()}
     assert got == want and len(want) > 0
     # maintenance actually folded: far fewer files than batches × parts

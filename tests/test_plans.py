@@ -183,7 +183,7 @@ def test_fused_stage_single_python_pass_whole_pipeline(spark, docs_parquet):
 
     docs = spark.read.schema(DOC_SCHEMA).parquet(docs_parquet)
     assert "ExistingRDD" not in _explain(
-        extract_stage(spark, PipelineConfig(), docs, entity_dict_df(spark)), "simple"
+        extract_stage(spark, PipelineConfig(), docs, entity_dict_df(spark))[0], "simple"
     )
     res = run(spark, PipelineConfig(), docs, entity_dict_df(spark))
     res.merged_mentions.count()  # materialize the cache

@@ -19,7 +19,7 @@ from pie_spark.config import PipelineConfig
 def _linked_and_map(spark):
     docs = interleaved_docs(spark, "/root/testdata/sf0.001")
     dict_df = entity_dict_df(spark)
-    merged = extract_stage(spark, PipelineConfig(), docs, dict_df)
+    merged, _ = extract_stage(spark, PipelineConfig(), docs, dict_df)
     # adversarial skew: replicate the hottest surface's mentions 30×
     # with distinct mention ids (union of shifted copies)
     from pyspark.sql import functions as F
@@ -37,7 +37,7 @@ def _linked_and_map(spark):
         )
     linked = link_mentions(skewed, dict_df)
     labels = adaptive_components(
-        spark, build_edges(dict_df), [], 1, driver_max_edges=10**6
+        spark, build_edges(dict_df), salt_k=1, driver_max_edges=10**6
     )
     return linked, key_canonical_map(labels), hot_surface
 
@@ -56,8 +56,7 @@ def test_salted_with_canon_equals_broadcast(spark):
     ]
     salted = sorted(
         tuple(r)
-        for r in _with_canon(
-            linked, key_map, hot=hot_key, salt_k=8, broadcast_dim=False
-        ).select(cols).collect()
+        for r in _with_canon(linked, key_map, hot=hot_key, salt_k=8)
+        .select(cols).collect()
     )
     assert bcast == salted and len(bcast) > 0
