@@ -36,13 +36,6 @@ def main() -> None:
                    help="broadcast cap; a bigger dictionary switches to the "
                         "dictionary-scale gazetteer + salted J1/J4 joins "
                         "(dict_mode recorded in lineage)")
-    p.add_argument("--hot-keys-from", default="",
-                   help="streaming-counter output dir (streaming/counters.py "
-                        "landing zone); its top --hot-k norm_keys seed the "
-                        "shard fallback's J1/J4 salting instead of the batch "
-                        "A4 scan — a standing landing zone learns hot "
-                        "entities across runs. Triples are identical either "
-                        "way (salting is result-preserving for any hot list).")
     args = p.parse_args()
 
     from pyspark.sql import SparkSession
@@ -60,14 +53,6 @@ def main() -> None:
     from pie_spark.runner import run_checkpointed
     from pie_spark.schemas import DOC_SCHEMA
 
-    hot_norm_keys: tuple[str, ...] = ()
-    if args.hot_keys_from:
-        from pie_spark.streaming.counters import hot_keys_from_counts
-
-        hot_norm_keys = tuple(
-            hot_keys_from_counts(spark, args.hot_keys_from, k=args.hot_k)
-        )
-
     cfg = PipelineConfig(
         output_path=args.output,
         checkpoint_dir=args.checkpoint,
@@ -77,7 +62,6 @@ def main() -> None:
         salt_k=args.salt_k,
         enable_crf=not args.no_crf,
         dict_max_surfaces=args.dict_max_surfaces,
-        hot_norm_keys=hot_norm_keys,
     )
     if args.input_format == "fixtures":
         docs = interleaved_docs(spark, args.input)
@@ -95,7 +79,6 @@ def main() -> None:
             {
                 "run_id": out.run_id,
                 "triples": n,
-                "hot_norm_keys": len(hot_norm_keys),
                 "wall_sec": round(wall, 3),
                 "extract_snapshot": out.extract_snapshot,
                 "output_snapshot": out.output_snapshot,

@@ -38,15 +38,6 @@ class PipelineConfig:
     # hit-identical. Raise with corpus size (group ≈ docs_with_char /
     # shard_salt_parts).
     shard_salt_parts: int = 8
-    # pre-computed hot norm_keys for the J1 linking and J4 canonical-
-    # attach salting of the shard-fallback path (VERDICT r05 next#7: the
-    # streaming counters' hot_keys_from_counts output, via the CLI's
-    # --hot-keys-from). Non-empty → downstream_stage SKIPS the batch A4
-    # scan over the mention set and salts on this list instead — a
-    # standing landing zone learns its hot entities incrementally across
-    # drains. Salting is result-preserving for ANY hot list (the
-    # salted-join/CC contracts), so triples are identical either way.
-    hot_norm_keys: tuple[str, ...] = ()
     # --- CC loop -----------------------------------------------------------
     cc_max_iters: int = 20
     # dictionary graphs at/below this edge count run exact union-find on

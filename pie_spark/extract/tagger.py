@@ -126,17 +126,8 @@ def tokenize(text: str) -> list[tuple[int, int, str]]:
 
 _INITDOT_RE = re.compile(r"[A-Z]\.")
 
-# token → feature-row cache. Features are a pure function of the token
-# string and the rows are exact 0/1 indicators, so caching is
-# bit-identical; natural-language vocabularies repeat heavily, so this
-# skips the string predicates for the vast majority of tokens.
-_FEAT_CACHE: dict[str, tuple[int, ...]] = {}
-
 
 def _feat_row(t: str) -> tuple[int, ...]:
-    cached = _FEAT_CACHE.get(t)
-    if cached is not None:
-        return cached
     row = [0] * len(FEATS)
     row[BIAS] = 1
     low = t.lower().rstrip(".,;:")
@@ -162,10 +153,7 @@ def _feat_row(t: str) -> tuple[int, ...]:
         row[STREETLEX] = 1
     if low in _SUFFIXES:
         row[SUFFIX] = 1
-    out = tuple(row)
-    if len(_FEAT_CACHE) < 1_000_000:  # bound worker memory on huge vocab
-        _FEAT_CACHE[t] = out
-    return out
+    return tuple(row)
 
 
 def features(tokens: list[str]) -> np.ndarray:

@@ -118,9 +118,7 @@ def downstream_stage(
     checkpoint snapshot. ``dict_mode`` becomes one ``hot`` value shared
     by both dictionary joins, J1 linking and J4 canonical attach:
     ``None`` (broadcast hash join) in "broadcast" mode, else the salted
-    shuffle join (J6) on ``cfg.hot_norm_keys`` — streamed counters via
-    the CLI's --hot-keys-from — or, when that is empty, the batch A4
-    hot list over the mention set."""
+    shuffle join (J6) on the batch A4 hot list over the mention set."""
     # media branch carries only (doc_id, media_ref) past the explode;
     # the parquet ReadSchema still includes spans.text (no nested
     # pruning through the array explode — see media_refs)
@@ -130,7 +128,7 @@ def downstream_stage(
     # own measured degree stats
     hot = None
     if dict_mode != "broadcast":
-        hot = list(cfg.hot_norm_keys) or hot_keys(surface_frequencies(merged), cfg.hot_k)
+        hot = hot_keys(surface_frequencies(merged), cfg.hot_k)
     linked = link_mentions(merged, dict_df, hot=hot, salt_k=cfg.salt_k)
 
     labels = adaptive_components(

@@ -14,6 +14,7 @@ sides, counts cast to BIGINT, float aggregates rounded.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -36,17 +37,98 @@ def _tp(spark: SparkSession, sf_dir: str, name: str, key: str = "doc_id") -> Dat
 
 
 # ---------------------------------------------------------------------------
+# replay-oracle plumbing: the lazily-built oracles replay a Python
+# reference (or read corpus constants) over the SAME fixture dir their
+# query ran on (_oracle_sf_dir), then inline the result as SQL
+# ---------------------------------------------------------------------------
+
+
+def _duck_rows(sql: str) -> list[tuple]:
+    """All rows of one DuckDB query on a fresh in-memory connection."""
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        return con.execute(sql).fetchall()
+    finally:
+        con.close()
+
+
+def _comention_edges(sf_dir: str) -> list[tuple[str, str, int]]:
+    """(w1, w2, pair_docs) of the co-mention graph over ``sf_dir``'s
+    documents, w1 < w2, pair_docs >= COMENTION_MIN_PAIR_DOCS: the edge
+    set every graph replay oracle starts from, built by the same CTEs
+    the SQL graph oracles run."""
+    ctes = _SQL_COMENTION_CTES.replace(
+        "FROM documents", f"FROM read_parquet('{sf_dir}/documents.parquet')"
+    )
+    return sorted(
+        _duck_rows(
+            f"WITH {ctes} SELECT w1, w2, pair_docs FROM pair"
+            f" WHERE pair_docs >= {COMENTION_MIN_PAIR_DOCS}"
+        )
+    )
+
+
+def _symmetric_edges(sf_dir: str) -> list[tuple[str, str]]:
+    """Both directions of every co-mention edge, sorted."""
+    fwd = [(a, b) for a, b, _ in _comention_edges(sf_dir)]
+    return sorted(fwd + [(b, a) for a, b in fwd])
+
+
+def _sql_str(v: str) -> str:
+    """A single-quoted DuckDB string literal. DuckDB does no backslash
+    processing inside quotes, so only the quote itself doubles."""
+    return "'" + v.replace("'", "''") + "'"
+
+
+def _sql_lit(v) -> str:
+    if isinstance(v, str):
+        return _sql_str(v)
+    if isinstance(v, list):
+        return "[" + ", ".join(map(_sql_lit, v)) + "]"
+    return repr(v)  # int / float: the literal DuckDB parses back exactly
+
+
+def _values_sql(cols: dict[str, str | None], rows: list[tuple]) -> str:
+    """``rows`` (Python tuples) as one SQL relation with columns
+    ``cols`` (name → DuckDB type to cast to, or None to keep the
+    literal's own type). Zero rows give a typed empty result."""
+
+    def cast(expr: str, typ: str | None) -> str:
+        return f"CAST({expr} AS {typ})" if typ else expr
+
+    if not rows:
+        return "SELECT " + ", ".join(
+            f"{cast('NULL', t)} AS {c}" for c, t in cols.items()
+        ) + " WHERE FALSE"
+    types = list(cols.values())
+    values = ",\n".join(
+        "(" + ", ".join(cast(_sql_lit(v), t) for v, t in zip(row, types)) + ")"
+        for row in rows
+    )
+    return f"SELECT * FROM (VALUES {values}) AS v({', '.join(cols)})"
+
+
+# ---------------------------------------------------------------------------
 # pipeline (rows-only: Arrow-UDF extraction + iterative CC not SQL-expressible)
 # ---------------------------------------------------------------------------
 
 
-_PIPE_LAST_SF_DIR: str | None = None
+# fixture dir each replay family's query last ran on (None = not run in
+# this process). "bfs" is shared by bfs/hyperball/ppr/sssp, "walks" by
+# the three walk queries.
+_ORACLE_SF: dict[str, str | None] = dict.fromkeys(
+    ("pipe", "bpe", "compress", "zorder", "dsir", "bm25", "ann_ivf", "pq",
+     "kcore", "bfs", "walks")
+)
 
 
-def _pipe_oracle_sf_dir() -> str:
-    import os
-
-    return _PIPE_LAST_SF_DIR or os.environ.get(
+def _oracle_sf_dir(family: str) -> str:
+    """The dir ``family``'s query last ran on, else the env default (an
+    oracle-only invocation). A caller-passed sf_dir diverging from the
+    env default would otherwise guarantee a false hash mismatch."""
+    return _ORACLE_SF[family] or os.environ.get(
         "SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01"
     )
 
@@ -57,8 +139,7 @@ def _pipeline(spark: SparkSession, sf_dir: str):
 
     # record the corpus dir so the lazily-built generator-corpus oracles
     # (extract/pipeline_sql.py) materialize and replay the SAME corpus
-    global _PIPE_LAST_SF_DIR
-    _PIPE_LAST_SF_DIR = sf_dir
+    _ORACLE_SF["pipe"] = sf_dir
     docs = interleaved_docs(spark, sf_dir)
     return run(spark, PipelineConfig(), docs, entity_dict_df(spark))
 
@@ -77,7 +158,7 @@ def q_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pipeline_triples_gen_sql() -> str:
     from pie_spark.extract.pipeline_sql import pipeline_triples_sql
 
-    return pipeline_triples_sql(_pipe_oracle_sf_dir())
+    return pipeline_triples_sql(_oracle_sf_dir("pipe"))
 
 
 def q_pipeline_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -96,7 +177,7 @@ def q_pipeline_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pipeline_mentions_gen_sql() -> str:
     from pie_spark.extract.pipeline_sql import pipeline_mentions_sql
 
-    return pipeline_mentions_sql(_pipe_oracle_sf_dir())
+    return pipeline_mentions_sql(_oracle_sf_dir("pipe"))
 
 
 def q_cc_canonical_map(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -124,12 +205,8 @@ def _cc_canonical_map_sql() -> str:
     from pie_spark.fixtures.gazetteer import dictionary_entries
 
     pairs = sorted({(e.norm_key, e.entity_id) for e in dictionary_entries()})
-    values = ",\n".join(
-        "('" + k.replace("'", "''") + "', '" + eid.replace("'", "''") + "')"
-        for k, eid in pairs
-    )
     return f"""
-WITH RECURSIVE dict(norm_key, entity_id) AS (VALUES {values}),
+WITH RECURSIVE dict AS ({_values_sql({"norm_key": None, "entity_id": None}, pairs)}),
 edges AS (SELECT DISTINCT 'k:' || norm_key AS src, 'e:' || entity_id AS dst FROM dict),
 und AS (SELECT src, dst FROM edges UNION SELECT dst AS src, src AS dst FROM edges),
 reach AS (
@@ -526,7 +603,6 @@ def q_salted_hot_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the whole streaming→hot-list→salting composition is
     result-preserving (salting must be correct for ANY hot list, so
     streaming/batch tie-break differences cannot leak into results)."""
-    import os
     import tempfile
 
     from pie_spark.canon.salting import salted_join
@@ -743,16 +819,11 @@ def q_regex_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _regex_mentions_sql() -> str:
     from pie_spark.extract.matchers import EMAIL_RE, PHONE_RE, SSN_RE, ADDRESS_RE
 
-    # duckdb single-quoted literals do no backslash processing, so the
-    # python regex strings pass through verbatim; only quotes double
-    def lit(pattern: str) -> str:
-        return pattern.replace("'", "''")
-
     ex = " UNION ALL".join(
         f"""
   SELECT doc_id, '{tname}' AS mention_type,
-         unnest(regexp_extract_all(text, '{lit(pat)}')) AS surface,
-         unnest(range(1, len(regexp_extract_all(text, '{lit(pat)}')) + 1)) AS ord
+         unnest(regexp_extract_all(text, {_sql_str(pat)})) AS surface,
+         unnest(range(1, len(regexp_extract_all(text, {_sql_str(pat)})) + 1)) AS ord
   FROM t"""
         for tname, pat in [
             ("EMAIL", EMAIL_RE), ("SSN", SSN_RE),
@@ -881,21 +952,15 @@ def _merged_mention_ctes(gaz_surfaces: list[str]) -> str:
     from pie_spark.extract.matchers import ADDRESS_RE, EMAIL_RE, PHONE_RE, SSN_RE
     from pie_spark.extract.tagger_sql import crf_sql_ctes
 
-    def lit(pattern: str) -> str:
-        return pattern.replace("'", "''")
-
     rx = " UNION ALL".join(
         f"""
   SELECT doc_id, '{tname}' AS mention_type,
-         unnest(regexp_extract_all(text, '{lit(pat)}')) AS surface
+         unnest(regexp_extract_all(text, {_sql_str(pat)})) AS surface
   FROM t"""
         for tname, pat in [
             ("EMAIL", EMAIL_RE), ("SSN", SSN_RE),
             ("PHONE", PHONE_RE), ("ADDRESS", ADDRESS_RE),
         ]
-    )
-    surfaces = ", ".join(
-        "('" + s.replace("'", "''") + "')" for s in gaz_surfaces
     )
     return f"""
 {crf_sql_ctes('t').strip()},
@@ -916,7 +981,7 @@ gaz_hits AS (
   SELECT t.doc_id, t.text, s.surface,
          strpos(t.text, s.surface) - 1 AS s,
          strpos(t.text, s.surface) - 1 + length(s.surface) AS e
-  FROM t CROSS JOIN (VALUES {surfaces}) s(surface)
+  FROM t CROSS JOIN ({_values_sql({"surface": None}, [(g,) for g in gaz_surfaces])}) s
   WHERE strpos(t.text, s.surface) > 0
 ),
 gb AS (
@@ -1015,12 +1080,9 @@ def _pipeline_triples_all_sql() -> str:
     entries = sorted(
         {(e.surface, e.norm_key, e.entity_id, e.prior) for e in dictionary_entries()}
     )
-    def _q(v: str) -> str:
-        return v.replace("'", "''")
-
-    dict_vals = ",\n".join(
-        f"('{_q(s)}', '{_q(k)}', '{_q(eid)}', CAST({p!r} AS DOUBLE))"
-        for s, k, eid, p in entries
+    pdict = _values_sql(
+        {"dict_surface": None, "norm_key": None, "entity_id": None, "prior": "DOUBLE"},
+        entries,
     )
     gaz_surfaces = sorted({e.surface for e in dictionary_entries()})
     jac = (
@@ -1034,7 +1096,7 @@ WITH RECURSIVE
 t AS MATERIALIZED (SELECT CAST(c_custkey AS VARCHAR) AS doc_id, {_mentions_corpus_sql()} AS text
       FROM customer),
 {_merged_mention_ctes(gaz_surfaces).strip()},
-pdict(dict_surface, norm_key, entity_id, prior) AS (VALUES {dict_vals}),
+pdict AS ({pdict}),
 pm AS (
   SELECT doc_id, s, e, surface,
          trim(regexp_replace(lower(surface), '[^a-z0-9]+', ' ', 'g')) AS norm_key
@@ -1124,15 +1186,12 @@ def _redact_pii_sql() -> str:
         SSN_VALID_RE,
     )
 
-    def lit(p: str) -> str:
-        return p.replace("'", "''")
-
     out = "text"
     for tname, pat in [
         ("EMAIL", EMAIL_RE), ("SSN", SSN_VALID_RE),
         ("PHONE", PHONE_RE), ("ADDRESS", ADDRESS_RE),
     ]:
-        out = f"regexp_replace({out}, '{lit(pat)}', '[{tname}]', 'g')"
+        out = f"regexp_replace({out}, {_sql_str(pat)}, '[{tname}]', 'g')"
     return f"""
 WITH t AS (SELECT CAST(c_custkey AS VARCHAR) AS doc_id, {_pii_text_sql()} AS text FROM customer)
 SELECT doc_id, {out} AS redacted FROM t
@@ -1601,7 +1660,6 @@ SELECT token, tf, df FROM v ORDER BY tf DESC, token ASC LIMIT 25
 
 
 BPE_N_MERGES = 24
-_BPE_LAST_SF_DIR: str | None = None
 
 
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1616,8 +1674,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark-BPE ≡ Python-BPE on identical input, every rank."""
     from pie_spark.text.bpe import train_bpe
 
-    global _BPE_LAST_SF_DIR
-    _BPE_LAST_SF_DIR = sf_dir
+    _ORACLE_SF["bpe"] = sf_dir
     docs = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
     )
@@ -1629,39 +1686,22 @@ def _bpe_merges_sql() -> str:
     DuckDB reads from the same documents parquet q_bpe_merges trained
     on (same split semantics: literal single-space split, empties
     dropped)."""
-    import os
-
-    import duckdb
-
     from pie_spark.text.bpe import train_bpe_reference
 
-    base = _BPE_LAST_SF_DIR or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01"
-    )
-    con = duckdb.connect()
-    wf = con.execute(
+    wf = _duck_rows(
         f"""
         SELECT word, COUNT(*)::BIGINT AS freq FROM (
           SELECT unnest(string_split(text, ' ')) AS word
-          FROM read_parquet('{base}/documents.parquet')
+          FROM read_parquet('{_oracle_sf_dir("bpe")}/documents.parquet')
         ) WHERE word <> '' GROUP BY word
         """
-    ).fetchall()
-    con.close()
+    )
     merges = train_bpe_reference(
         [(w, int(f)) for w, f in wf], n_merges=BPE_N_MERGES
     )
-
-    def _q(v: str) -> str:
-        return v.replace("'", "''")
-
-    values = ",\n".join(
-        f"(CAST({rank} AS INTEGER), '{_q(l)}', '{_q(r)}', CAST({n} AS BIGINT))"
-        for rank, l, r, n in merges
-    )
-    return (
-        f'SELECT * FROM (VALUES {values}) '
-        f'AS t("rank", "left", "right", pair_count)'
+    return _values_sql(
+        {'"rank"': "INTEGER", '"left"': None, '"right"': None, "pair_count": "BIGINT"},
+        merges,
     )
 
 
@@ -1699,14 +1739,7 @@ def _pagerank_entities_sql() -> str:
     )
     edge_list = fwd + [(d, s) for s, d in fwd]
     ranks = pagerank_reference(edge_list, iters=PAGERANK_ITERS)
-
-    def _q(v: str) -> str:
-        return v.replace("'", "''")
-
-    values = ",\n".join(
-        f"('{_q(n)}', CAST({r} AS BIGINT))" for n, r in sorted(ranks.items())
-    )
-    return f"SELECT * FROM (VALUES {values}) AS t(node, rank_ppb)"
+    return _values_sql({"node": None, "rank_ppb": "BIGINT"}, sorted(ranks.items()))
 
 
 def q_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1830,17 +1863,12 @@ def _fuzzy_link_sql() -> str:
     from pie_spark.fixtures.gazetteer import dictionary_entries
 
     rows = sorted({(e.norm_key, e.entity_id) for e in dictionary_entries()})
-
-    def _q(v: str) -> str:
-        return v.replace("'", "''")
-
-    values = ",\n".join(f"('{_q(k)}', '{_q(e)}')" for k, e in rows)
     var = (
         "list_distinct(list_append(list_transform(range(length({c})), "
         "i -> substr({c}, 1, i) || substr({c}, i + 2)), {c}))"
     )
     return f"""
-WITH dict(norm_key, entity_id) AS (VALUES {values}),
+WITH dict AS ({_values_sql({"norm_key": None, "entity_id": None}, rows)}),
 surf AS (SELECT DISTINCT '@' || substr(norm_key, 2) AS s FROM dict),
 s_var AS (SELECT DISTINCT s, unnest({var.format(c='s')}) AS v FROM surf),
 d_var AS (SELECT DISTINCT norm_key AS k, entity_id AS e,
@@ -1964,9 +1992,6 @@ SELECT q_ppm, rank, lo, hi FROM hit WHERE rn = 1
 """
 
 
-_COMPRESS_LAST_SF_DIR: str | None = None
-
-
 def q_compression_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X27: zlib compression-ratio curation signal (r06 operator, born
     folded). The oracle replays zlib over the duckdb-read corpus and
@@ -1976,36 +2001,25 @@ def q_compression_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     primitive, same stance as the media codec recipe oracles."""
     from pie_spark.text.analysis import compression_signals
 
-    global _COMPRESS_LAST_SF_DIR
-    _COMPRESS_LAST_SF_DIR = sf_dir
+    _ORACLE_SF["compress"] = sf_dir
     return compression_signals(_t(spark, sf_dir, "documents"))
 
 
 def _compression_signals_sql() -> str:
-    import os
     import zlib
 
-    import duckdb
-
-    base = _COMPRESS_LAST_SF_DIR or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01"
-    )
-    path = base.rstrip("/") + "/documents.parquet"
-    con = duckdb.connect()
-    rows = con.execute(
+    path = _oracle_sf_dir("compress").rstrip("/") + "/documents.parquet"
+    rows = _duck_rows(
         f"SELECT CAST(doc_id AS BIGINT), coalesce(text, '') "
         f"FROM read_parquet('{path}')"
-    ).fetchall()
-    con.close()
+    )
     vals = []
     for did, text in rows:
         raw = text.encode("utf-8")
         rb, zb = len(raw), len(zlib.compress(raw, 6))
-        vals.append(f"({did}, {rb}, {zb}, {zb * 1_000_000 // max(rb, 1)})")
-    return (
-        "SELECT * FROM (VALUES "
-        + ",\n".join(vals)
-        + ") AS t(doc_id, raw_bytes, zlib_bytes, ratio_ppm)"
+        vals.append((did, rb, zb, zb * 1_000_000 // max(rb, 1)))
+    return _values_sql(
+        dict.fromkeys(("doc_id", "raw_bytes", "zlib_bytes", "ratio_ppm")), vals
     )
 
 
@@ -2271,7 +2285,6 @@ FROM c LEFT JOIN LATERAL (
 
 
 ZORDER_BITS = 16
-_ZORDER_LAST_SF_DIR: str | None = None
 
 
 def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2284,8 +2297,7 @@ def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     covers every bit of every key."""
     from pie_spark.io.zorder import zorder_key
 
-    global _ZORDER_LAST_SF_DIR
-    _ZORDER_LAST_SF_DIR = sf_dir
+    _ORACLE_SF["zorder"] = sf_dir
     part = _t(spark, sf_dir, "part").select("p_partkey", "p_size")
     keyed, _ = zorder_key(part, ["p_partkey", "p_size"], bits=ZORDER_BITS)
     return keyed.select(
@@ -2296,33 +2308,21 @@ def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _zorder_key_sql() -> str:
     """Lazy oracle: same min/max bounds (exact ints from the same
     parquet), same expression builders with the DuckDB division token."""
-    import os
-
-    import duckdb
-
     from pie_spark.io.zorder import norm_expr_sql, zorder_expr_sql
 
-    base = _ZORDER_LAST_SF_DIR or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01"
-    )
-    con = duckdb.connect()
-    bounds = {}
+    base = _oracle_sf_dir("zorder")
+    norms = []
     for c in ("p_partkey", "p_size"):
-        bounds[c] = con.execute(
+        ((lo, hi),) = _duck_rows(
             f"SELECT CAST(min({c}) AS BIGINT), CAST(max({c}) AS BIGINT) "
             f"FROM read_parquet('{base}/part.parquet')"
-        ).fetchone()
-    con.close()
-    norms = [
-        norm_expr_sql(c, *bounds[c], ZORDER_BITS, intdiv="//")
-        for c in ("p_partkey", "p_size")
-    ]
+        )
+        norms.append(norm_expr_sql(c, lo, hi, ZORDER_BITS, intdiv="//"))
     z = zorder_expr_sql(norms, ZORDER_BITS)
     return f"SELECT p_partkey, p_size, CAST({z} AS BIGINT) AS zkey FROM part"
 
 
 DSIR_FRAC_PPM = 250_000
-_DSIR_LAST_SF_DIR: str | None = None
 
 
 def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2336,8 +2336,7 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pie_spark.prep.dsir import importance_scores, select_top_fraction
     from pie_spark.text.lm import fit_bigram_lm
 
-    global _DSIR_LAST_SF_DIR
-    _DSIR_LAST_SF_DIR = sf_dir
+    _ORACLE_SF["dsir"] = sf_dir
     d = _tp(spark, sf_dir, "documents")
     tgt = fit_bigram_lm(d.filter(F.col("doc_id") % 4 == 0), add_k=0.5)
     raw = fit_bigram_lm(d, add_k=0.5)
@@ -2412,18 +2411,9 @@ def _dsir_select_sql() -> str:
     mirrored tokenizer, exact total-cost difference, and the K-th-
     largest threshold via ORDER BY ... LIMIT 1 OFFSET K-1 (identical
     keep-≥-threshold semantics to the Spark rank arithmetic)."""
-    import os
-
-    import duckdb
-
-    base = _DSIR_LAST_SF_DIR or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01"
+    ((n,),) = _duck_rows(
+        f"SELECT count(*) FROM read_parquet('{_oracle_sf_dir('dsir')}/documents.parquet')"
     )
-    con = duckdb.connect()
-    n = con.execute(
-        f"SELECT count(*) FROM read_parquet('{base}/documents.parquet')"
-    ).fetchone()[0]
-    con.close()
     k = (DSIR_FRAC_PPM * int(n) + 999_999) // 1_000_000
     return f"""
 WITH toks AS MATERIALIZED (
@@ -2483,14 +2473,7 @@ def _lpa_communities_sql() -> str:
     )
     edge_list = fwd + [(d, s) for s, d in fwd]
     labels = lpa_reference(edge_list, iters=LPA_ITERS)
-
-    def _q(v: str) -> str:
-        return v.replace("'", "''")
-
-    values = ",\n".join(
-        f"('{_q(n)}', '{_q(l)}')" for n, l in sorted(labels.items())
-    )
-    return f"SELECT * FROM (VALUES {values}) AS t(node, label)"
+    return _values_sql({"node": None, "label": None}, sorted(labels.items()))
 
 
 SESSION_GAP_SEC = 600
@@ -2536,7 +2519,6 @@ FROM n GROUP BY 1, 2
 
 BM25_QUERY_TERMS = ["customer", "merge", "spark", "window"]
 BM25_TOP_K = 50
-_BM25_LAST_SF_DIR: str | None = None
 
 
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2548,8 +2530,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the hash check covers every micro-unit of every score."""
     from pie_spark.text.bm25 import fit_bm25, score_query
 
-    global _BM25_LAST_SF_DIR
-    _BM25_LAST_SF_DIR = sf_dir
+    _ORACLE_SF["bm25"] = sf_dir
     d = _tp(spark, sf_dir, "documents")
     idx = fit_bm25(d)
     return score_query(d, idx, BM25_QUERY_TERMS, top_k=BM25_TOP_K)
@@ -2560,25 +2541,16 @@ def _bm25_topk_sql() -> str:
     the corpus constants (N docs, total token length) are computed
     with the mirrored tokenizer and inlined as literals so the idf and
     score expressions are TEXTUALLY the ones Spark evaluated."""
-    import os
-
-    import duckdb
-
     from pie_spark.text.bm25 import idf_expr_sql, score_expr_sql
 
-    base = _BM25_LAST_SF_DIR or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01"
-    )
-    con = duckdb.connect()
-    n, tl = con.execute(
+    ((n, tl),) = _duck_rows(
         f"""
         SELECT CAST(count(*) AS BIGINT),
                CAST(coalesce(sum(len(list_filter({_DUCK_TOKS}, x -> x <> ''))), 0) AS BIGINT)
-        FROM read_parquet('{base}/documents.parquet') documents
+        FROM read_parquet('{_oracle_sf_dir("bm25")}/documents.parquet') documents
         """
-    ).fetchone()
-    con.close()
-    terms_sql = ", ".join(f"'{t}'" for t in BM25_QUERY_TERMS)
+    )
+    terms_sql = ", ".join(map(_sql_str, BM25_QUERY_TERMS))
     return f"""
 WITH toks AS (
   SELECT doc_id, list_filter({_DUCK_TOKS}, x -> x <> '') AS toks FROM documents
@@ -2997,12 +2969,12 @@ def _cos_sql(v: str, q: str) -> str:
 def _planes_cte(nbits: int, n_tables: int, dim: int) -> str:
     from pie_spark.ann.search import _planes
 
-    rows = []
-    for t in range(n_tables):
-        for bit, p in enumerate(_planes(dim, nbits, t)):
-            lit = "[" + ", ".join(repr(float(x)) for x in p) + "]"
-            rows.append(f"({t}, {bit}, {lit}::DOUBLE[])")
-    return "planes(tbl, bit, p) AS (VALUES " + ",\n".join(rows) + ")"
+    rows = [
+        (t, bit, [float(x) for x in p])
+        for t in range(n_tables)
+        for bit, p in enumerate(_planes(dim, nbits, t))
+    ]
+    return f"planes AS ({_values_sql({'tbl': None, 'bit': None, 'p': 'DOUBLE[]'}, rows)})"
 
 
 def _bucket_cte(name: str, src: str, id_expr: str, vec: str, dim: int) -> str:
@@ -3213,11 +3185,8 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pie_spark.ann.search import ivf_topk
 
     # record the fixture dir so the lazily-built oracle replays training
-    # over the SAME embeddings table this query trained on (ADVICE r05:
-    # a caller-passed sf_dir diverging from the oracle's env default
-    # guaranteed a false hash mismatch)
-    global _ANN_IVF_LAST_SF_DIR
-    _ANN_IVF_LAST_SF_DIR = sf_dir
+    # over the SAME embeddings table this query trained on
+    _ORACLE_SF["ann_ivf"] = sf_dir
     emb, q = _ann_queries(spark, sf_dir)
     cents = train_kmeans(emb, k=ANN_IVF_K, iters=ANN_IVF_ITERS)
     return ivf_topk(emb, q, k=10, nprobe=4, centroids=cents)
@@ -3246,14 +3215,10 @@ def _lloyd_replay_centroids(path: str, k: int, iters: int) -> dict[str, list[flo
     import hashlib
     import math
 
-    import duckdb
-
-    con = duckdb.connect()
-    rows = con.execute(
+    rows = _duck_rows(
         f"SELECT CAST(vec_id AS VARCHAR), embedding::DOUBLE[] "
         f"FROM read_parquet('{path}')"
-    ).fetchall()
-    con.close()
+    )
     vecs = {r[0]: [float(x) for x in r[1]] for r in rows}
 
     def h64(s: str) -> int:
@@ -3292,15 +3257,11 @@ def _lloyd_replay_centroids(path: str, k: int, iters: int) -> dict[str, list[flo
     return cents
 
 
-_ANN_IVF_LAST_SF_DIR: str | None = None
-
-
 # shared by q_pq_topk and _pq_topk_sql (the trained-IVF lockstep rule)
 PQ_M = 4
 PQ_KSUB = 16
 PQ_ITERS = 3
 PQ_TOPK = 10
-_PQ_LAST_SF_DIR: str | None = None
 
 
 def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3315,8 +3276,7 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark-PQ ≡ Python-PQ ≡ DuckDB-ADC, the trained-IVF chain shape."""
     from pie_spark.ann.pq import pq_encode, pq_topk, train_pq
 
-    global _PQ_LAST_SF_DIR
-    _PQ_LAST_SF_DIR = sf_dir
+    _ORACLE_SF["pq"] = sf_dir
     emb, q = _ann_queries(spark, sf_dir)
     cb = train_pq(emb, m=PQ_M, ksub=PQ_KSUB, iters=PQ_ITERS)
     codes = pq_encode(emb, cb, m=PQ_M)
@@ -3328,35 +3288,26 @@ def _pq_topk_sql(k: int = PQ_TOPK) -> str:
     over the SAME embeddings parquet (inlined VALUES, micro BIGINT),
     then encode + ADC entirely in integer SQL. Lazy so importing
     pie_spark.queries stays cheap."""
-    import os
-
-    import duckdb
-
     from pie_spark.ann.pq import pq_reference
 
-    base = _PQ_LAST_SF_DIR or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01"
-    )
-    path = base.rstrip("/") + "/embeddings.parquet"
-    con = duckdb.connect()
-    rows = con.execute(
+    path = _oracle_sf_dir("pq").rstrip("/") + "/embeddings.parquet"
+    rows = _duck_rows(
         f"SELECT CAST(vec_id AS VARCHAR), embedding::DOUBLE[] "
         f"FROM read_parquet('{path}')"
-    ).fetchall()
-    con.close()
+    )
     vecs = {r[0]: [float(x) for x in r[1]] for r in rows}
     cb = pq_reference(vecs, m=PQ_M, ksub=PQ_KSUB, iters=PQ_ITERS)
     d = len(next(iter(cb.values())))
-    values = ",\n".join(
-        f"({s}, {c}, [" + ", ".join(str(int(x)) for x in cv) + "]::BIGINT[])"
-        for (s, c), cv in sorted(cb.items())
+    codebook = _values_sql(
+        {"sub": None, "code": None, "cv": "BIGINT[]"},
+        [(s, c, [int(x) for x in cv]) for (s, c), cv in sorted(cb.items())],
     )
     sq = (
         f"CAST(list_sum(list_transform(range(1, {d} + 1), "
         f"j -> (sv[j] - cv[j]) * (sv[j] - cv[j]))) AS BIGINT)"
     )
     return f"""
-WITH cb(sub, code, cv) AS (VALUES {values}),
+WITH cb AS ({codebook}),
 mv AS (SELECT CAST(vec_id AS VARCHAR) AS vec_id,
               list_transform(embedding::DOUBLE[], x -> CAST(round(x * 1e6) AS BIGINT)) AS mvv
        FROM embeddings),
@@ -3390,26 +3341,19 @@ FROM scored QUALIFY rank <= {k}
 def _ann_ivf_trained_sql(k: int = 10, nprobe: int = 4) -> str:
     """DuckDB mirror of the trained-IVF query. Training happens at
     SQL-build time via the independent Python replay over the SAME
-    sf_dir q_ann_ivf last trained on (falling back to the
-    SPARK_GRAFT_ORACLE_SF env default when the query has not run in
-    this process — e.g. an oracle-only invocation); the centroids land
-    as literal VALUES. Lazy (registered as a callable) so importing
-    pie_spark.queries stays cheap."""
-    import os
-
-    base = _ANN_IVF_LAST_SF_DIR or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01"
-    )
-    path = base.rstrip("/") + "/embeddings.parquet"
+    sf_dir q_ann_ivf last trained on (see _oracle_sf_dir); the
+    centroids land as literal VALUES. Lazy (registered as a callable)
+    so importing pie_spark.queries stays cheap."""
+    path = _oracle_sf_dir("ann_ivf").rstrip("/") + "/embeddings.parquet"
     cents = _lloyd_replay_centroids(path, ANN_IVF_K, ANN_IVF_ITERS)
-    values = ",\n".join(
-        f"('{cid}', [" + ", ".join(repr(float(x)) for x in cv) + "]::DOUBLE[])"
-        for cid, cv in sorted(cents.items())
+    cents_sql = _values_sql(
+        {"cent_id": None, "cv": "DOUBLE[]"},
+        [(cid, [float(x) for x in cv]) for cid, cv in sorted(cents.items())],
     )
     return f"""
 WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 3),
-cents(cent_id, cv) AS (VALUES {values}),
+cents AS ({cents_sql}),
 assigned AS (
   SELECT vec_id, v, cent_id FROM (
     SELECT c.vec_id, c.v, cents.cent_id,
@@ -3763,7 +3707,6 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     everywhere ⇔ the stream suppressed every planted duplicate; the key
     set ⇔ batch D1 semantics (stream ≡ batch, now hash-checked, not just
     pytest-asserted)."""
-    import os
     import tempfile
 
     from pie_spark.streaming.dedup import streaming_dedup_docs
@@ -3878,9 +3821,9 @@ COMENTION_MIN_PAIR_DOCS = 320
 KCORE_K = 10
 
 # shared oracle CTEs: the co-mention graph recipe (tokenize →
-# per-doc-distinct incidence → pair counts), textually reused by the
-# word_colloc / triangle_counts / kcore_nodes oracles so all three
-# check the SAME graph construction
+# per-doc-distinct incidence → pair counts), textually reused by the SQL
+# graph oracles and by _comention_edges (the replay oracles' edge read)
+# so all of them check the SAME graph construction
 _SQL_COMENTION_CTES = """
 toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
 inc AS (SELECT DISTINCT doc_id, token FROM toks WHERE token <> ''),
@@ -3952,9 +3895,6 @@ SELECT node, CAST(count(*) AS BIGINT) AS n_triangles FROM corners GROUP BY 1
 """
 
 
-_KCORE_LAST_SF_DIR: str | None = None
-
-
 def q_kcore_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G7: k-core decomposition (r06 operator, born folded — registry
     at the 50 cap): iterative peeling (graph/kcore.py) of the same
@@ -3965,8 +3905,7 @@ def q_kcore_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pie_spark.graph.kcore import kcore
     from pie_spark.text.colloc import comention_edges
 
-    global _KCORE_LAST_SF_DIR
-    _KCORE_LAST_SF_DIR = sf_dir
+    _ORACLE_SF["kcore"] = sf_dir
     edges = comention_edges(
         _tp(spark, sf_dir, "documents"), min_pair_docs=COMENTION_MIN_PAIR_DOCS
     )
@@ -3976,35 +3915,11 @@ def q_kcore_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kcore_nodes_sql() -> str:
     """Lazy oracle: plain-Python peel over the SAME parquet-derived
     edge set, inlined as VALUES."""
-    import os
-
-    import duckdb
-
     from pie_spark.graph.kcore import kcore_reference
 
-    base = _KCORE_LAST_SF_DIR or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01"
-    )
-    con = duckdb.connect()
-    edges = con.execute(
-        f"""
-        WITH {_SQL_COMENTION_CTES.replace("FROM documents",
-             f"FROM read_parquet('{base}/documents.parquet')")}
-        SELECT w1, w2 FROM pair WHERE pair_docs >= {COMENTION_MIN_PAIR_DOCS}
-        """
-    ).fetchall()
-    con.close()
+    edges = [(a, b) for a, b, _ in _comention_edges(_oracle_sf_dir("kcore"))]
     core = kcore_reference(edges, k=KCORE_K)
-    if not core:
-        return "SELECT CAST(NULL AS VARCHAR) AS node, CAST(NULL AS BIGINT) AS core_deg WHERE FALSE"
-
-    def _q(v: str) -> str:
-        return v.replace("'", "''")
-
-    values = ",\n".join(
-        f"('{_q(n)}', CAST({d} AS BIGINT))" for n, d in sorted(core.items())
-    )
-    return f"SELECT * FROM (VALUES {values}) AS t(node, core_deg)"
+    return _values_sql({"node": "VARCHAR", "core_deg": "BIGINT"}, sorted(core.items()))
 
 
 # k-anonymity audit constants: quasi-identifiers = (nation, segment,
@@ -4153,7 +4068,6 @@ JOIN deg db ON db.node = p.b
 
 
 BFS_SOURCES = ["spark", "window"]
-_BFS_LAST_SF_DIR: str | None = None
 
 
 def q_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4166,8 +4080,7 @@ def q_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pie_spark.graph.bfs import bfs_distances
     from pie_spark.text.colloc import comention_edges
 
-    global _BFS_LAST_SF_DIR
-    _BFS_LAST_SF_DIR = sf_dir
+    _ORACLE_SF["bfs"] = sf_dir
     edges = comention_edges(
         _tp(spark, sf_dir, "documents"), min_pair_docs=COMENTION_MIN_PAIR_DOCS
     )
@@ -4177,33 +4090,11 @@ def q_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bfs_distances_sql() -> str:
     """Lazy oracle: plain-Python deque BFS over the SAME parquet-derived
     edge set, inlined as VALUES."""
-    import os
-
-    import duckdb
-
     from pie_spark.graph.bfs import bfs_reference
 
-    base = _BFS_LAST_SF_DIR or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01"
-    )
-    con = duckdb.connect()
-    edges = con.execute(
-        f"""
-        WITH {_SQL_COMENTION_CTES.replace("FROM documents",
-             f"FROM read_parquet('{base}/documents.parquet')")}
-        SELECT w1, w2 FROM pair WHERE pair_docs >= {COMENTION_MIN_PAIR_DOCS}
-        """
-    ).fetchall()
-    con.close()
+    edges = [(a, b) for a, b, _ in _comention_edges(_oracle_sf_dir("bfs"))]
     dist = bfs_reference(edges, BFS_SOURCES)
-
-    def _q(v: str) -> str:
-        return v.replace("'", "''")
-
-    values = ",\n".join(
-        f"('{_q(n)}', CAST({d} AS INTEGER))" for n, d in sorted(dist.items())
-    )
-    return f"SELECT * FROM (VALUES {values}) AS t(node, dist)"
+    return _values_sql({"node": None, "dist": "INTEGER"}, sorted(dist.items()))
 
 
 KANON_SUPPRESS_K = 10
@@ -4330,7 +4221,7 @@ FROM classes GROUP BY 1
 
 WALK_LEN = 5
 WALKS_PER_NODE = 2
-_WALKS_LAST_SF_DIR: str | None = None
+_WALK_COLS = {"start": None, "walk_no": "INTEGER", "path": None}
 
 
 def q_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4344,8 +4235,7 @@ def q_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pie_spark.graph.walks import random_walks, symmetrize
     from pie_spark.text.colloc import comention_edges
 
-    global _WALKS_LAST_SF_DIR
-    _WALKS_LAST_SF_DIR = sf_dir
+    _ORACLE_SF["walks"] = sf_dir
     edges = comention_edges(
         _tp(spark, sf_dir, "documents"), min_pair_docs=COMENTION_MIN_PAIR_DOCS
     )
@@ -4358,34 +4248,12 @@ def _random_walks_sql() -> str:
     """Lazy oracle: plain-Python walk replay over the SAME parquet-
     derived co-mention edge set (symmetrized in the replay), inlined
     as VALUES."""
-    import os
-
-    import duckdb
-
     from pie_spark.graph.walks import random_walks_reference
 
-    base = _WALKS_LAST_SF_DIR or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01"
+    walks = random_walks_reference(
+        _symmetric_edges(_oracle_sf_dir("walks")), WALK_LEN, WALKS_PER_NODE
     )
-    con = duckdb.connect()
-    edges = con.execute(
-        f"""
-        WITH {_SQL_COMENTION_CTES.replace("FROM documents",
-             f"FROM read_parquet('{base}/documents.parquet')")}
-        SELECT w1, w2 FROM pair WHERE pair_docs >= {COMENTION_MIN_PAIR_DOCS}
-        """
-    ).fetchall()
-    con.close()
-    sym = sorted({(a, b) for a, b in edges} | {(b, a) for a, b in edges})
-    walks = random_walks_reference(sym, WALK_LEN, WALKS_PER_NODE)
-
-    def _q(v: str) -> str:
-        return v.replace("'", "''")
-
-    values = ",\n".join(
-        f"('{_q(s)}', CAST({k} AS INTEGER), '{_q(p)}')" for s, k, p in sorted(walks)
-    )
-    return f"SELECT * FROM (VALUES {values}) AS t(start, walk_no, path)"
+    return _values_sql(_WALK_COLS, sorted(walks))
 
 
 def q_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4438,8 +4306,7 @@ def q_hyperball(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pie_spark.graph.hyperball import hyperball
     from pie_spark.text.colloc import comention_edges
 
-    global _BFS_LAST_SF_DIR
-    _BFS_LAST_SF_DIR = sf_dir
+    _ORACLE_SF["bfs"] = sf_dir
     fwd = comention_edges(
         _tp(spark, sf_dir, "documents"), min_pair_docs=COMENTION_MIN_PAIR_DOCS
     )
@@ -4452,39 +4319,14 @@ def q_hyperball(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hyperball_sql() -> str:
     """Lazy oracle: plain-Python HyperBall replay over the SAME
     parquet-derived symmetric edge set, inlined as VALUES."""
-    import os
-
-    import duckdb
-
     from pie_spark.graph.hyperball import hyperball_reference
 
-    base = _BFS_LAST_SF_DIR or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01"
+    rows = hyperball_reference(
+        _symmetric_edges(_oracle_sf_dir("bfs")), rounds=HYPERBALL_ROUNDS
     )
-    con = duckdb.connect()
-    fwd = con.execute(
-        f"""
-        WITH {_SQL_COMENTION_CTES.replace("FROM documents",
-             f"FROM read_parquet('{base}/documents.parquet')")}
-        SELECT w1, w2 FROM pair WHERE pair_docs >= {COMENTION_MIN_PAIR_DOCS}
-        """
-    ).fetchall()
-    con.close()
-    sym = sorted(fwd) + sorted((d, s) for s, d in fwd)
-    rows = hyperball_reference(sym, rounds=HYPERBALL_ROUNDS)
-
-    def _q(v: str) -> str:
-        return v.replace("'", "''")
-
-    values = ",\n".join(
-        f"('{_q(n)}', CAST({t} AS BIGINT), CAST({s} AS BIGINT),"
-        f" CAST({e} AS BIGINT))"
-        for n, t, s, e in sorted(rows)
-    )
-    return (
-        "SELECT * FROM (VALUES "
-        + values
-        + ") AS t(node, round, reg_sum, empties)"
+    return _values_sql(
+        {"node": None, "round": "BIGINT", "reg_sum": "BIGINT", "empties": "BIGINT"},
+        sorted(rows),
     )
 
 
@@ -4501,8 +4343,7 @@ def q_ppr_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pie_spark.graph.pagerank import personalized_pagerank
     from pie_spark.text.colloc import comention_edges
 
-    global _BFS_LAST_SF_DIR
-    _BFS_LAST_SF_DIR = sf_dir
+    _ORACLE_SF["bfs"] = sf_dir
     fwd = comention_edges(
         _tp(spark, sf_dir, "documents"), min_pair_docs=COMENTION_MIN_PAIR_DOCS
     )
@@ -4515,34 +4356,12 @@ def q_ppr_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ppr_entities_sql() -> str:
     """Lazy oracle: plain-Python personalized-PageRank replay over the
     SAME parquet-derived symmetric edge set, inlined as VALUES."""
-    import os
-
-    import duckdb
-
     from pie_spark.graph.pagerank import personalized_pagerank_reference
 
-    base = _BFS_LAST_SF_DIR or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01"
+    ranks = personalized_pagerank_reference(
+        _symmetric_edges(_oracle_sf_dir("bfs")), BFS_SOURCES, iters=PPR_ITERS
     )
-    con = duckdb.connect()
-    fwd = con.execute(
-        f"""
-        WITH {_SQL_COMENTION_CTES.replace("FROM documents",
-             f"FROM read_parquet('{base}/documents.parquet')")}
-        SELECT w1, w2 FROM pair WHERE pair_docs >= {COMENTION_MIN_PAIR_DOCS}
-        """
-    ).fetchall()
-    con.close()
-    edge_list = sorted(fwd) + sorted((d, s) for s, d in fwd)
-    ranks = personalized_pagerank_reference(edge_list, BFS_SOURCES, iters=PPR_ITERS)
-
-    def _q(v: str) -> str:
-        return v.replace("'", "''")
-
-    values = ",\n".join(
-        f"('{_q(n)}', CAST({r} AS BIGINT))" for n, r in sorted(ranks.items())
-    )
-    return f"SELECT * FROM (VALUES {values}) AS t(node, rank_ppb)"
+    return _values_sql({"node": None, "rank_ppb": "BIGINT"}, sorted(ranks.items()))
 
 
 def q_sssp_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4556,8 +4375,7 @@ def q_sssp_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pie_spark.graph.sssp import sssp_distances
     from pie_spark.text.colloc import cooccurrence_counts, doc_term_incidence
 
-    global _BFS_LAST_SF_DIR
-    _BFS_LAST_SF_DIR = sf_dir
+    _ORACLE_SF["bfs"] = sf_dir
     w_edges = (
         cooccurrence_counts(doc_term_incidence(_tp(spark, sf_dir, "documents")))
         .filter(F.col("pair_docs") >= COMENTION_MIN_PAIR_DOCS)
@@ -4573,34 +4391,14 @@ def q_sssp_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sssp_distances_sql() -> str:
     """Lazy oracle: independent Python Dijkstra over the SAME parquet-
     derived weighted edge set, inlined as VALUES."""
-    import os
-
-    import duckdb
-
     from pie_spark.graph.sssp import sssp_reference
 
-    base = _BFS_LAST_SF_DIR or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01"
-    )
-    con = duckdb.connect()
-    edges = con.execute(
-        f"""
-        WITH {_SQL_COMENTION_CTES.replace("FROM documents",
-             f"FROM read_parquet('{base}/documents.parquet')")}
-        SELECT w1, w2, CAST(1000000 // pair_docs AS BIGINT)
-        FROM pair WHERE pair_docs >= {COMENTION_MIN_PAIR_DOCS}
-        """
-    ).fetchall()
-    con.close()
+    edges = [
+        (a, b, 1_000_000 // pair_docs)
+        for a, b, pair_docs in _comention_edges(_oracle_sf_dir("bfs"))
+    ]
     dist = sssp_reference(edges, BFS_SOURCES)
-
-    def _q(v: str) -> str:
-        return v.replace("'", "''")
-
-    values = ",\n".join(
-        f"('{_q(n)}', CAST({d} AS BIGINT))" for n, d in sorted(dist.items())
-    )
-    return f"SELECT * FROM (VALUES {values}) AS t(node, dist)"
+    return _values_sql({"node": None, "dist": "BIGINT"}, sorted(dist.items()))
 
 
 N2V_WALK_LEN = 5
@@ -4619,8 +4417,7 @@ def q_node2vec_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pie_spark.graph.walks import node2vec_walks, symmetrize
     from pie_spark.text.colloc import comention_edges
 
-    global _WALKS_LAST_SF_DIR
-    _WALKS_LAST_SF_DIR = sf_dir
+    _ORACLE_SF["walks"] = sf_dir
     edges = comention_edges(
         _tp(spark, sf_dir, "documents"), min_pair_docs=COMENTION_MIN_PAIR_DOCS
     )
@@ -4635,39 +4432,15 @@ def q_node2vec_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _node2vec_corpus_sql() -> str:
     """Lazy oracle: plain-Python node2vec replay over the DuckDB-read
     co-mention edge set, inlined as VALUES."""
-    import os
-
-    import duckdb
-
     from pie_spark.graph.walks import node2vec_walks_reference
 
-    base = _WALKS_LAST_SF_DIR or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01"
-    )
-    con = duckdb.connect()
-    edges = con.execute(
-        f"""
-        WITH {_SQL_COMENTION_CTES.replace("FROM documents",
-             f"FROM read_parquet('{base}/documents.parquet')")}
-        SELECT w1, w2 FROM pair WHERE pair_docs >= {COMENTION_MIN_PAIR_DOCS}
-        """
-    ).fetchall()
-    con.close()
-    sym = sorted({(a, b) for a, b in edges} | {(b, a) for a, b in edges})
     walks = node2vec_walks_reference(
-        sym,
+        _symmetric_edges(_oracle_sf_dir("walks")),
         N2V_WALK_LEN,
         WALKS_PER_NODE,
         max_bias_degree=N2V_MAX_BIAS_DEG,
     )
-
-    def _q(v: str) -> str:
-        return v.replace("'", "''")
-
-    values = ",\n".join(
-        f"('{_q(s)}', CAST({k} AS INTEGER), '{_q(p)}')" for s, k, p in sorted(walks)
-    )
-    return f"SELECT * FROM (VALUES {values}) AS t(start, walk_no, path)"
+    return _values_sql(_WALK_COLS, sorted(walks))
 
 
 def q_weighted_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4681,8 +4454,7 @@ def q_weighted_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pie_spark.graph.walks import weighted_walks
     from pie_spark.text.colloc import cooccurrence_counts, doc_term_incidence
 
-    global _WALKS_LAST_SF_DIR
-    _WALKS_LAST_SF_DIR = sf_dir
+    _ORACLE_SF["walks"] = sf_dir
     fwd = (
         cooccurrence_counts(doc_term_incidence(_tp(spark, sf_dir, "documents")))
         .filter(F.col("pair_docs") >= COMENTION_MIN_PAIR_DOCS)
@@ -4701,35 +4473,12 @@ def q_weighted_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _weighted_walks_sql() -> str:
     """Lazy oracle: independent bisect replay over the SAME parquet-
     derived weighted edge set, inlined as VALUES."""
-    import os
-
-    import duckdb
-
     from pie_spark.graph.walks import weighted_walks_reference
 
-    base = _WALKS_LAST_SF_DIR or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01"
-    )
-    con = duckdb.connect()
-    fwd = con.execute(
-        f"""
-        WITH {_SQL_COMENTION_CTES.replace("FROM documents",
-             f"FROM read_parquet('{base}/documents.parquet')")}
-        SELECT w1, w2, pair_docs FROM pair
-        WHERE pair_docs >= {COMENTION_MIN_PAIR_DOCS}
-        """
-    ).fetchall()
-    con.close()
-    wedges = sorted(fwd) + sorted((d, s, w) for s, d, w in fwd)
+    fwd = _comention_edges(_oracle_sf_dir("walks"))
+    wedges = fwd + sorted((d, s, w) for s, d, w in fwd)
     walks = weighted_walks_reference(wedges, WALK_LEN, WALKS_PER_NODE)
-
-    def _q(v: str) -> str:
-        return v.replace("'", "''")
-
-    values = ",\n".join(
-        f"('{_q(s)}', CAST({k} AS INTEGER), '{_q(p)}')" for s, k, p in sorted(walks)
-    )
-    return f"SELECT * FROM (VALUES {values}) AS t(start, walk_no, path)"
+    return _values_sql(_WALK_COLS, sorted(walks))
 
 
 TRANSE_N_NEG = 4

@@ -115,10 +115,9 @@ def stream_surface_counts(
 def hot_keys_from_counts(spark: SparkSession, output_dir: str, k: int) -> list[str]:
     """Top-k hottest norm_keys from the accumulated streaming counters —
     the incremental replacement for the batch A4 job. Feed the result to
-    ``PipelineConfig.hot_norm_keys`` (the CLI's ``--hot-keys-from``) or
-    to ``salted_join``/``salt_edges`` directly: a continuously-fed
-    landing zone learns its hot entities across drains instead of
-    re-scanning the corpus every run. The collect is limit(k)-bounded
+    ``salted_join``/``salt_edges``: a continuously-fed landing zone
+    learns its hot entities across drains instead of re-scanning the
+    corpus every run. The collect is limit(k)-bounded
     (driver-safe by construction)."""
     rows = (
         latest_counts(spark, output_dir)

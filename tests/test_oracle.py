@@ -264,3 +264,38 @@ def test_oracle_parity(spark, ddb, name, fn, sql):
     if g != w:
         diffs = [(a, b) for a, b in zip(g, w) if a != b][:5]
         raise AssertionError(f"{name}: value mismatch, first diffs: {diffs}")
+
+
+def test_values_sql_quotes_casts_and_types_empty_result():
+    """The replay oracles' one Python→SQL renderer: a quote inside a
+    string round-trips, per-column casts apply, and zero rows still give
+    the declared column names and types."""
+    from pie_spark.queries import _values_sql
+
+    con = duckdb.connect()
+    rows = [("O'Brien", 1, [0.5, 2.0]), ("it''s", 2, [1.0])]
+    rel = con.sql(_values_sql({"name": None, "n": "BIGINT", "v": "DOUBLE[]"}, rows))
+    assert [str(t) for t in rel.types] == ["VARCHAR", "BIGINT", "DOUBLE[]"]
+    assert sorted(rel.fetchall()) == sorted(rows)
+    empty = con.sql(_values_sql({"node": "VARCHAR", "core_deg": "BIGINT"}, []))
+    assert empty.columns == ["node", "core_deg"]
+    assert [str(t) for t in empty.types] == ["VARCHAR", "BIGINT"]
+    assert empty.fetchall() == []
+    con.close()
+
+
+def test_replay_oracle_reads_the_dir_its_query_ran_on(spark, monkeypatch):
+    """After q_kcore_nodes runs on sf0.001, its lazy oracle replays
+    sf0.001, not the sf0.01 env default."""
+    from pie_spark import queries as q
+
+    from .conftest import SF_DIR_001
+
+    # restore the record at teardown: other lazy oracles in this module
+    # are built before their query runs
+    monkeypatch.setitem(q._ORACLE_SF, "kcore", None)
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF", SF_DIR_01)
+    default = sorted(duckdb.sql(q._kcore_nodes_sql()).fetchall())
+    got = sorted(tuple(r) for r in q.q_kcore_nodes(spark, SF_DIR_001).collect())
+    assert sorted(duckdb.sql(q._kcore_nodes_sql()).fetchall()) == got
+    assert got != default

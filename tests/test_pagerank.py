@@ -119,3 +119,23 @@ def test_ppr_absent_seed_raises(spark):
     df = spark.createDataFrame([("a", "b")], ["src", "dst"])
     with _pytest.raises(ValueError):
         personalized_pagerank(df, ["nope"], iters=2)
+
+
+def test_full_seed_list_is_uniform_pagerank(spark):
+    # |S| = n: per-seed base (15·n·scale) div n = 15·scale and the
+    # dangling share div n are term for term the uniform update
+    from pie_spark.graph.pagerank import (
+        personalized_pagerank,
+        personalized_pagerank_reference,
+    )
+
+    edge_list = sorted(
+        {(f"k{i % 11}", f"e{i % 5}") for i in range(40)}
+        | {("e0", "e1"), ("e1", "e2")}
+    )
+    nodes = sorted({n for e in edge_list for n in e})
+    df = _edges_df(spark, edge_list)
+    want = _ranks(pagerank(df, iters=7))
+    assert _ranks(personalized_pagerank(df, nodes, iters=7)) == want
+    assert personalized_pagerank_reference(edge_list, nodes, iters=7) == want
+    assert pagerank_reference(edge_list, iters=7) == want

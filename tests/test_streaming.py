@@ -191,49 +191,50 @@ def test_stateful_surface_counts_accumulate(spark, tmp_path):
     assert got_hot == want_hot
 
 
-def test_hot_norm_keys_preempt_batch_a4(spark):
-    """cfg.hot_norm_keys (the streamed-counter hot list, CLI
-    --hot-keys-from) must seed the fallback's J1/J4 salting WITHOUT the
-    batch A4 scan — and produce byte-identical triples, since salting is
-    result-preserving for any hot list (VERDICT r05 next#7)."""
+def test_planted_hot_list_salts_identical_triples(spark):
+    """Salting the fallback's J1/J4 joins on ANY hot list (here a
+    planted one that is not the A4 list) must produce byte-identical
+    triples — salting is result-preserving (VERDICT r05 next#7), which
+    is what lets hot_keys_from_counts stand in for the batch A4 scan."""
     import contextlib
     import io
 
+    from pie_spark.canon.canonical import key_canonical_map
+    from pie_spark.canon.cc import adaptive_components
+    from pie_spark.canon.edges import build_edges
+    from pie_spark.extract.spans import media_refs
+    from pie_spark.graph.triples import _with_canon, all_triples
+    from pie_spark.link.linker import link_mentions
     from pie_spark.link.stats import hot_keys, surface_frequencies
     from pie_spark.pipeline import run
 
     docs = interleaved_docs(spark, SF_DIR).limit(60).localCheckpoint(eager=True)
     d = entity_dict_df(spark)
 
-    # force the non-broadcast path so the hot list actually salts J1/J4
+    # force the non-broadcast path so the A4 hot list salts J1/J4
     cfg = PipelineConfig(dict_max_surfaces=10)
     base = run(spark, cfg, docs, d)
-    t_base = {tuple(r) for r in base.triples.select("subj", "pred", "obj", "doc_id").collect()}
+    cols = ("subj", "pred", "obj", "doc_id")
+    t_base = {tuple(r) for r in base.triples.select(*cols).collect()}
     a4_hot = hot_keys(surface_frequencies(base.merged_mentions), cfg.hot_k)
     assert a4_hot  # the A4 scan finds hot keys
 
-    # a DIFFERENT (streamed) hot list: reversed A4 plus a decoy
-    planted = tuple(reversed(a4_hot[: max(1, len(a4_hot) // 2)])) + ("zz_decoy",)
-    seeded = run(
-        spark,
-        PipelineConfig(dict_max_surfaces=10, hot_norm_keys=planted),
-        docs,
-        d,
-    )
-    t_seeded = {tuple(r) for r in seeded.triples.select("subj", "pred", "obj", "doc_id").collect()}
+    # a DIFFERENT hot list: reversed A4 plus a decoy
+    planted = list(reversed(a4_hot[: max(1, len(a4_hot) // 2)])) + ["zz_decoy"]
+    linked = link_mentions(base.merged_mentions, d, hot=planted, salt_k=cfg.salt_k)
+    key_map = key_canonical_map(adaptive_components(spark, build_edges(d)))
+    seeded = _with_canon(linked, key_map, hot=planted, salt_k=cfg.salt_k)
+    triples = all_triples(media_refs(docs), seeded, base.merged_mentions, cfg.pii_types)
+    t_seeded = {tuple(r) for r in triples.select(*cols).collect()}
     assert t_seeded == t_base and len(t_base) > 0
-    # r06 regression guard: the seeded run must STILL take the salted
-    # shuffle join (the _salt machinery shows in the optimized plan) —
-    # a seeded hot list once short-circuited into broadcasting the
-    # oversized dictionary, value-equal but an OOM at real dict scale.
-    # The decoy in the plan shows the seed, not A4, is what salts.
+    # the planted list, not A4, is what salts: the decoy shows in the
+    # salted join's optimized plan
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        seeded.linked.explain("extended")
+        seeded.explain("extended")
     assert "_salt" in buf.getvalue()
     assert "zz_decoy" in buf.getvalue()
     base.unpersist()
-    seeded.unpersist()
 
 
 def test_stream_neardup_index_accumulates_to_batch(spark, tmp_path):
