@@ -31,16 +31,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pie_spark.ann.search import cosine
+from pie_spark.dedup.shingles import h64
 
 MICRO = 1_000_000
 
 
 def _hash_seed_centroids(c: DataFrame, k: int) -> DataFrame:
-    hk = F.conv(
-        F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
     return (
-        c.withColumn("hk", hk)
+        c.withColumn("hk", h64(F.col("vec_id").cast("string")))
         .orderBy("hk", "vec_id")  # TakeOrderedAndProject, not a global sort
         .limit(k)
         .select(F.col("vec_id").alias("cent_id"), F.col("v").alias("cv"))

@@ -51,6 +51,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pie_spark.dedup.shingles import h64, h64_py
+
 MICRO = 1_000_000
 
 
@@ -92,11 +94,10 @@ def _seed_codebook(subs: DataFrame, ksub: int) -> DataFrame:
     vector with the (c+1)-th smallest portable id hash — the ivf_topk /
     train_kmeans seed recipe, reproducible without RNG. orderBy+limit
     is TakeOrderedAndProject; the row_number window runs on ksub rows."""
-    hk = F.conv(F.substring(F.md5(F.col("vec_id")), 1, 15), 16, 10).cast("long")
     seeds = (
         subs.select("vec_id")
         .distinct()
-        .withColumn("hk", hk)
+        .withColumn("hk", h64(F.col("vec_id")))
         .orderBy("hk", "vec_id")
         .limit(ksub)
         .withColumn(
@@ -358,12 +359,6 @@ def pq_rerank_topk(
 # ---------------------------------------------------------------- reference
 
 
-def _h64(s: str) -> int:
-    import hashlib
-
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-
 def _round_half_up(x: float) -> int:
     import math
 
@@ -385,7 +380,7 @@ def pq_reference(
     subv = {
         (i, s): micro[i][s * d : (s + 1) * d] for i in micro for s in range(m)
     }
-    seeds = sorted(micro, key=lambda i: (_h64(i), i))[:ksub]
+    seeds = sorted(micro, key=lambda i: (h64_py(i), i))[:ksub]
     cb = {(s, c): list(subv[(seeds[c], s)]) for s in range(m) for c in range(ksub)}
     for _ in range(iters):
         members: dict[tuple[int, int], list[list[int]]] = {}

@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from pie_spark.dedup.shingles import h64
+
 SEED = 42
 
 
@@ -178,9 +180,8 @@ def ivf_topk(
     if centroids is not None:
         cents = centroids.select("cent_id", "cv")
     else:
-        hk = F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10).cast("long")
         cents = (
-            c.withColumn("hk", hk)
+            c.withColumn("hk", h64(F.col("vec_id").cast("string")))
             .orderBy("hk", "vec_id")
             .limit(n_centroids)
             .select(F.col("vec_id").alias("cent_id"), F.col("v").alias("cv"))

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pie_spark.dedup.shingles import doc_shingles
+from pie_spark.dedup.shingles import doc_shingles, h64
 
 K_PERMS = 16
 BANDS = 4  # → rows per band R = K_PERMS // BANDS = 4
@@ -45,9 +45,7 @@ def signatures(
     hashed = sh.select(
         "doc_id",
         *[
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit(f"p{p}:"), F.col("s"))), 1, 15), 16, 10
-            ).cast("long").alias(f"h{p}")
+            h64(F.concat(F.lit(f"p{p}:"), F.col("s"))).alias(f"h{p}")
             for p in range(k)
         ],
     )

@@ -15,6 +15,8 @@ makes Catalyst re-evaluate the normalize+split per element — measured
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -88,3 +90,9 @@ def h64(col: Column) -> Column:
     """Portable 60-bit hash: md5 hex prefix → bigint (same in DuckDB via
     ('0x' || substr(md5(x),1,15))::UBIGINT)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def h64_py(s: str) -> int:
+    """Plain-Python twin of :func:`h64` (bit-identical on the same
+    string) for the reference replays."""
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)

@@ -51,7 +51,7 @@ from collections import defaultdict
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pie_spark.link.hll import scale_constant
+from pie_spark.link.hll import bucket_rho, scale_constant
 
 P = 4
 M_REGS = 1 << P  # 16 registers -> rel. error ~1.04/sqrt(16) = 26%
@@ -60,14 +60,8 @@ _REG_COLS = [f"r{j}" for j in range(M_REGS)]
 
 def _init_registers(nodes: DataFrame) -> DataFrame:
     """t = 0 sketch of {v}: one register set from the node's own hash
-    (the link/hll.py recipe at p = 4: bucket = first hex nibble,
-    w = next 13 hex chars, rho = 53 − bitlen(w), 53 at w = 0)."""
-    hx = F.sha2(F.col("node").cast("string"), 256)
-    bucket = F.conv(F.substring(hx, 1, 1), 16, 10).cast("int")
-    w = F.conv(F.substring(hx, 2, 13), 16, 10).cast("long")
-    rho = F.when(w == F.lit(0), F.lit(53)).otherwise(
-        F.lit(53) - F.length(F.conv(w.cast("string"), 10, 2))
-    )
+    (link/hll.py:bucket_rho at p = 4)."""
+    bucket, rho = bucket_rho(F.col("node"), P)
     return nodes.select(
         "node",
         *[

@@ -55,13 +55,12 @@ triple sets.
 
 from __future__ import annotations
 
-import hashlib
 from itertools import product
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pie_spark.dedup.shingles import h64
+from pie_spark.dedup.shingles import h64, h64_py
 
 PACK = 1 << 40  # probe·PACK + idx: idx < 2^40, probe < 2^23 → < 2^63
 MAX_PROBES = 1 << 23
@@ -92,6 +91,13 @@ def _check_pack(n_ents: int, probes: int) -> None:
         raise ValueError(f"probes={probes} must be < {MAX_PROBES} (2^23)")
 
 
+def _check_counts(n_neg: int, probes: int) -> None:
+    # F.sequence counts DOWN past an empty range: n_neg = 0 would draw
+    # slots 1 and 0, probes = 0 probes 0 and -1
+    if n_neg < 1 or probes < 1:
+        raise ValueError(f"n_neg={n_neg} and probes={probes} must both be >= 1")
+
+
 def entity_vocab(triples: DataFrame) -> DataFrame:
     """(entity, idx): rank-indexed distinct subj ∪ obj vocabulary.
     Ranked with the DISTRIBUTED total-order index (pie_spark/ranks.py
@@ -119,6 +125,7 @@ def transe_negatives(
     surviving slot carries the lowest probe whose candidate neither
     equals the true tail nor forms a true triple. Deterministic and
     partitioning-invariant."""
+    _check_counts(n_neg, probes)
     triples = triples.select("subj", "pred", "obj").distinct()
     vocab = entity_vocab(triples).localCheckpoint(eager=True)
     n_ents = vocab.count()  # bounded 1-row driver agg (pagerank precedent)
@@ -247,9 +254,10 @@ def weighted_negatives(
     direct BETWEEN join (IEJoin), an independent algorithm.
     """
     from pie_spark.events.rangejoin import range_join
-
-    triples = triples.select("subj", "pred", "obj").distinct()
     from pie_spark.ranks import prefix_sums
+
+    _check_counts(n_neg, probes)
+    triples = triples.select("subj", "pred", "obj").distinct()
 
     w = weights.select(
         F.col("entity").cast("string").alias("entity"),
@@ -360,7 +368,7 @@ def weighted_negatives_reference(
     for (s, p, o), k in product(sorted(tset), range(1, n_neg + 1)):
         best = None
         for j in range(probes):
-            h = _h64_py(f"{s}#{p}#{o}#{k}#{j}") % total
+            h = h64_py(f"{s}#{p}#{o}#{k}#{j}") % total
             i = bisect_right(cum_hi, h - 1)
             cand = ents[i]
             if cand == o or (s, p, cand) in tset:
@@ -370,10 +378,6 @@ def weighted_negatives_reference(
         if best is not None:
             out.append((s, p, o, k, best[0], best[1]))
     return out
-
-
-def _h64_py(s: str) -> int:
-    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
 def transe_negatives_reference(
@@ -393,7 +397,7 @@ def transe_negatives_reference(
         oi = idx_of[o]
         best = None
         for j in range(probes):
-            ci = _h64_py(f"{s}#{p}#{oi}#{k}#{j}") % v
+            ci = h64_py(f"{s}#{p}#{oi}#{k}#{j}") % v
             if ci == oi or (s, p, ci) in true_pairs:
                 continue
             best = (j, ci)

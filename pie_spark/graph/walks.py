@@ -26,6 +26,13 @@ distributionally equivalent to a uniform neighbor choice (md5 is an
 avalanche hash; successive hops decorrelate through the changing
 ``t``/``cur`` inputs).
 
+All three walkers share ONE loop (``_walk``): seed the frontier
+(every node × walk_no) once, then apply the walker's ``step(frontier,
+t)`` for t = 1 .. walk_len − 1. The first-order uniform hop
+(``_uniform_hop``) is the whole step of :func:`random_walks`, hop 1
+and the hub-guarded walks of :func:`node2vec_walks`; only the
+node2vec biased pick and the weighted interval pick are walker-own.
+
 Scale shape (10^12-edge design point):
   * adjacency (src, dst, idx, outdeg) is built ONCE — the per-src
     neighbor ranking is a window sort partitioned by src (same cost
@@ -34,10 +41,10 @@ Scale shape (10^12-edge design point):
     same layout.
   * the moving side per hop is the frontier — exactly V·walks_per_node
     rows regardless of edge count — carrying (start, walk_no, cur,
-    path). One equi-join per hop on cur (AQE skew-split covers hub
-    nodes whose inflowing walk mass concentrates), no aggregation at
-    all; walk_len is fixed and small (5–80 in the literature), so the
-    job is walk_len narrow-ish rounds.
+    prev, path). One equi-join per hop on cur (AQE skew-split covers
+    hub nodes whose inflowing walk mass concentrates), no aggregation
+    at all; walk_len is fixed and small (5–80 in the literature), so
+    the job is walk_len narrow-ish rounds.
   * dangling nodes (outdeg 0 — possible on DIRECTED inputs) freeze:
     the left join leaves cur unchanged and the walk simply stops
     growing, matching the reference replay exactly. Undirected graphs
@@ -56,15 +63,17 @@ edge set inlined as VALUES (the BFS/k-core/PageRank precedent).
 
 from __future__ import annotations
 
-import hashlib
 from collections import defaultdict
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pie_spark.dedup.shingles import h64
+from pie_spark.dedup.shingles import h64, h64_py
 
 CHECKPOINT_EVERY = 4
+
+Step = Callable[[DataFrame, int], DataFrame]
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:
@@ -79,7 +88,16 @@ def symmetrize(edges: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def _step_hash(t: int) -> F.Column:
+def _distinct_pairs(edges: DataFrame) -> DataFrame:
+    return edges.select(
+        F.col("src").cast("string").alias("src"),
+        F.col("dst").cast("string").alias("dst"),
+    ).distinct()
+
+
+def _step_hash(t: int, *extra: F.Column) -> F.Column:
+    """h64(start#walk_no#t#cur[#extra…]) — ``extra`` is ``prev`` for the
+    node2vec second-order pick."""
     return h64(
         F.concat_ws(
             "#",
@@ -87,8 +105,103 @@ def _step_hash(t: int) -> F.Column:
             F.col("walk_no").cast("string"),
             F.lit(str(t)),
             F.col("cur"),
+            *extra,
         )
     )
+
+
+def _walk(
+    edges: DataFrame,
+    walk_len: int,
+    walks_per_node: int,
+    make_step: Callable[[], Step],
+) -> DataFrame:
+    """The one walk loop: seed (start, walk_no, cur, prev, path) for
+    every endpoint of ``edges`` × walk_no, build the walker's step, then
+    hop t = 1 .. walk_len − 1 with a lineage-truncating checkpoint every
+    CHECKPOINT_EVERY hops. walk_len ≤ 1 yields bare start nodes.
+    ``make_step`` runs after the count check, so a bad walks_per_node
+    fails before the step's eager checkpoints run any job."""
+    if walks_per_node < 1:
+        raise ValueError(f"walks_per_node={walks_per_node} must be >= 1")
+    nodes = (
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    frontier = nodes.select(
+        F.col("node").alias("start"),
+        F.explode(F.sequence(F.lit(0), F.lit(walks_per_node - 1))).alias("walk_no"),
+        F.col("node").alias("cur"),
+        F.lit(None).cast("string").alias("prev"),
+        F.col("node").alias("path"),
+    )
+    step = make_step()
+    for t in range(1, walk_len):
+        frontier = step(frontier, t)
+        if t % CHECKPOINT_EVERY == 0:
+            frontier = frontier.localCheckpoint(eager=True)
+    return frontier.select("start", "walk_no", "path")
+
+
+def _ranked_adjacency(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(deg, hop) over distinct (src, dst): deg is (deg_src, outdeg),
+    hop is (a_src, a_dst, a_idx) with a_idx the neighbor's rank in
+    ``ORDER BY dst`` — both built once and checkpointed."""
+    adj = (
+        edges.select(
+            "src",
+            "dst",
+            (F.row_number().over(Window.partitionBy("src").orderBy("dst")) - 1)
+            .cast("long")
+            .alias("idx"),
+            F.count("*").over(Window.partitionBy("src")).cast("long").alias("outdeg"),
+        )
+        .repartition("src")
+        .localCheckpoint(eager=True)
+    )
+    deg = (
+        adj.select(F.col("src").alias("deg_src"), "outdeg").distinct()
+        .localCheckpoint(eager=True)
+    )
+    hop = adj.select(
+        F.col("src").alias("a_src"),
+        F.col("dst").alias("a_dst"),
+        F.col("idx").alias("a_idx"),
+    )
+    return deg, hop
+
+
+def _uniform_hop(deg: DataFrame, hop: DataFrame) -> Step:
+    """First-order step: neighbor pmod(h64(start#walk_no#t#cur),
+    outdeg) in rank order; dangling walks keep ``cur`` and ``path``.
+    Writes ``prev`` = the node stepped from."""
+
+    def step(frontier: DataFrame, t: int) -> DataFrame:
+        picked = frontier.join(deg, frontier.cur == F.col("deg_src"), "left").select(
+            "start",
+            "walk_no",
+            "cur",
+            "path",
+            F.when(
+                F.col("outdeg").isNotNull(), F.pmod(_step_hash(t), F.col("outdeg"))
+            ).alias("pick"),
+        )
+        return picked.join(
+            hop, (picked.cur == F.col("a_src")) & (picked.pick == F.col("a_idx")), "left"
+        ).select(
+            "start",
+            "walk_no",
+            F.coalesce(F.col("a_dst"), F.col("cur")).alias("cur"),
+            F.col("cur").alias("prev"),
+            F.when(
+                F.col("a_dst").isNotNull(), F.concat_ws(" ", F.col("path"), F.col("a_dst"))
+            )
+            .otherwise(F.col("path"))
+            .alias("path"),
+        )
+
+    return step
 
 
 def random_walks(
@@ -101,79 +214,10 @@ def random_walks(
     edge list; ``path`` is the space-joined node sequence (the text
     contract of skipgram_counts, so walk corpora feed the existing
     pair extractor unchanged). Walks freeze at dangling nodes."""
-    edges = edges.select(
-        F.col("src").cast("string").alias("src"),
-        F.col("dst").cast("string").alias("dst"),
+    edges = _distinct_pairs(edges)
+    return _walk(
+        edges, walk_len, walks_per_node, lambda: _uniform_hop(*_ranked_adjacency(edges))
     )
-    w = Window.partitionBy("src").orderBy("dst")
-    adj = (
-        edges.distinct()
-        .select(
-            "src",
-            "dst",
-            (F.row_number().over(w) - 1).cast("long").alias("idx"),
-            F.count("*").over(Window.partitionBy("src")).cast("long").alias("outdeg"),
-        )
-        .repartition("src")
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    frontier = nodes.select(
-        F.col("node").alias("start"),
-        F.explode(
-            F.sequence(F.lit(0), F.lit(walks_per_node - 1))
-        ).alias("walk_no"),
-        F.col("node").alias("cur"),
-        F.col("node").alias("path"),
-    )
-    deg = (
-        adj.select(F.col("src").alias("deg_src"), "outdeg").distinct()
-        .localCheckpoint(eager=True)
-    )
-    hop = adj.select(
-        F.col("src").alias("a_src"),
-        F.col("dst").alias("a_dst"),
-        F.col("idx").alias("a_idx"),
-    )
-    for t in range(1, walk_len):
-        picked = (
-            frontier.join(deg, frontier.cur == F.col("deg_src"), "left")
-            .select(
-                "start",
-                "walk_no",
-                "cur",
-                "path",
-                F.when(
-                    F.col("outdeg").isNotNull(),
-                    F.pmod(_step_hash(t), F.col("outdeg")),
-                ).alias("pick"),
-            )
-        )
-        frontier = (
-            picked.join(
-                hop,
-                (picked.cur == F.col("a_src")) & (picked.pick == F.col("a_idx")),
-                "left",
-            )
-            .select(
-                "start",
-                "walk_no",
-                F.coalesce(F.col("a_dst"), F.col("cur")).alias("cur"),
-                F.when(
-                    F.col("a_dst").isNotNull(),
-                    F.concat_ws(" ", F.col("path"), F.col("a_dst")),
-                )
-                .otherwise(F.col("path"))
-                .alias("path"),
-            )
-        )
-        if t % CHECKPOINT_EVERY == 0:
-            frontier = frontier.localCheckpoint(eager=True)
-    return frontier.select("start", "walk_no", "path")
 
 
 def node2vec_walks(
@@ -215,210 +259,101 @@ def node2vec_walks(
     one window rank — the honest second-order cost, bounded by
     frontier·max_bias_degree rows.
     """
-    edges = edges.select(
-        F.col("src").cast("string").alias("src"),
-        F.col("dst").cast("string").alias("dst"),
-    ).distinct()
-    w = Window.partitionBy("src").orderBy("dst")
-    adj = (
-        edges.select(
-            "src",
-            "dst",
-            (F.row_number().over(w) - 1).cast("long").alias("idx"),
-            F.count("*").over(Window.partitionBy("src")).cast("long").alias("outdeg"),
-        )
-        .repartition("src")
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        adj.select(F.col("src").alias("deg_src"), "outdeg").distinct()
-        .localCheckpoint(eager=True)
-    )
-    hop = adj.select(
-        F.col("src").alias("a_src"),
-        F.col("dst").alias("a_dst"),
-        F.col("idx").alias("a_idx"),
-    )
-    eset = edges.select(
-        F.col("src").alias("e_src"), F.col("dst").alias("e_dst")
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    frontier = nodes.select(
-        F.col("node").alias("start"),
-        F.explode(F.sequence(F.lit(0), F.lit(walks_per_node - 1))).alias("walk_no"),
-        F.col("node").alias("cur"),
-        F.lit(None).cast("string").alias("prev"),
-        F.col("node").alias("path"),
-    )
+    edges = _distinct_pairs(edges)
 
-    def _first_order(fr: DataFrame, t: int) -> DataFrame:
-        picked = fr.join(deg, fr.cur == F.col("deg_src"), "left").select(
-            "start",
-            "walk_no",
-            "cur",
-            "path",
-            F.when(
-                F.col("outdeg").isNotNull(), F.pmod(_step_hash(t), F.col("outdeg"))
-            ).alias("pick"),
-        )
-        return picked.join(
-            hop, (picked.cur == F.col("a_src")) & (picked.pick == F.col("a_idx")), "left"
-        ).select(
-            "start",
-            "walk_no",
-            F.coalesce(F.col("a_dst"), F.col("cur")).alias("cur"),
-            F.col("cur").alias("prev"),
-            F.when(
-                F.col("a_dst").isNotNull(), F.concat_ws(" ", F.col("path"), F.col("a_dst"))
-            )
-            .otherwise(F.col("path"))
-            .alias("path"),
-        )
+    def make_step() -> Step:
+        deg, hop = _ranked_adjacency(edges)
+        uniform = _uniform_hop(deg, hop)
+        eset = edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"))
+        cols = ["start", "walk_no", "cur", "prev", "path"]
 
-    # walk_len <= 1 yields bare start nodes, matching the reference's
-    # range(1, walk_len) loop (ADVICE r06: the unconditional hop-1 step
-    # produced 2-node paths at this degenerate parameter)
-    if walk_len > 1:
-        frontier = _first_order(frontier, 1)
-    for t in range(2, walk_len):
-        fr = frontier.join(deg, frontier.cur == F.col("deg_src"), "left")
-        plain = fr.filter(
-            F.col("outdeg").isNull() | (F.col("outdeg") > max_bias_degree)
-        ).select("start", "walk_no", "cur", "prev", "path")
-        biased = fr.filter(
-            F.col("outdeg").isNotNull() & (F.col("outdeg") <= max_bias_degree)
-        ).select("start", "walk_no", "cur", "prev", "path")
-
-        cand = (
-            biased.join(hop, biased.cur == F.col("a_src"))
-            .join(
-                eset,
-                (F.col("prev") == F.col("e_src")) & (F.col("a_dst") == F.col("e_dst")),
-                "left",
-            )
-            .select(
-                "start",
-                "walk_no",
-                "cur",
-                "prev",
-                "path",
-                F.col("a_dst").alias("x"),
-                F.col("a_idx").alias("x_idx"),
-                # class 0 = return, 1 = shared-with-prev, 2 = out
-                F.when(F.col("a_dst") == F.col("prev"), F.lit(0))
-                .when(F.col("e_src").isNotNull(), F.lit(1))
-                .otherwise(F.lit(2))
-                .alias("cls"),
-            )
-        )
-        wt = (
-            F.when(F.col("cls") == 0, F.lit(w_return))
-            .when(F.col("cls") == 1, F.lit(w_shared))
-            .otherwise(F.lit(w_out))
-            .cast("long")
-        )
-        counts = cand.groupBy("start", "walk_no", "cur").agg(
-            F.sum(F.when(F.col("cls") == 0, 1).otherwise(0)).cast("long").alias("n0"),
-            F.sum(F.when(F.col("cls") == 1, 1).otherwise(0)).cast("long").alias("n1"),
-            F.sum(F.when(F.col("cls") == 2, 1).otherwise(0)).cast("long").alias("n2"),
-        )
-        # prev is functionally determined by (start, walk_no, cur) at
-        # this hop — it rides back in via the distinct-projection join
-        chosen = counts.alias("co").join(
-            cand.select("start", "walk_no", "cur", "prev").distinct().alias("pv"),
-            ["start", "walk_no", "cur"],
-        ).select(
-            "start",
-            "walk_no",
-            "cur",
-            "prev",
-            F.pmod(
-                h64(
-                    F.concat_ws(
-                        "#",
-                        F.col("start"),
-                        F.col("walk_no").cast("string"),
-                        F.lit(str(t)),
-                        F.col("cur"),
-                        F.col("prev"),
-                    )
-                ),
-                F.lit(w_return) * F.col("n0")
-                + F.lit(w_shared) * F.col("n1")
-                + F.lit(w_out) * F.col("n2"),
-            ).alias("h"),
-            "n0",
-            "n1",
-            "n2",
-        ).select(
-            "start",
-            "walk_no",
-            "cur",
-            "prev",
-            F.when(F.col("h") < F.lit(w_return) * F.col("n0"), F.lit(0))
-            .when(
-                F.col("h")
-                < F.lit(w_return) * F.col("n0") + F.lit(w_shared) * F.col("n1"),
-                F.lit(1),
-            )
-            .otherwise(F.lit(2))
-            .alias("pick_cls"),
-            F.when(
-                F.col("h") < F.lit(w_return) * F.col("n0"),
-                F.expr(f"h DIV {w_return}"),
-            )
-            .when(
-                F.col("h")
-                < F.lit(w_return) * F.col("n0") + F.lit(w_shared) * F.col("n1"),
-                F.expr(f"(h - {w_return} * n0) DIV {w_shared}"),
-            )
-            .otherwise(
-                F.expr(f"(h - {w_return} * n0 - {w_shared} * n1) DIV {w_out}")
-            )
-            .cast("long")
-            .alias("ordinal"),
-        )
-        ranked = cand.withColumn(
-            "rn",
-            (
-                F.row_number().over(
-                    Window.partitionBy("start", "walk_no", "cur", "cls").orderBy(
-                        "x_idx"
-                    )
+        def step(frontier: DataFrame, t: int) -> DataFrame:
+            if t == 1:
+                return uniform(frontier, t)
+            fr = frontier.join(deg, frontier.cur == F.col("deg_src"), "left")
+            guarded = F.col("outdeg").isNull() | (F.col("outdeg") > max_bias_degree)
+            plain = fr.filter(guarded).select(*cols)
+            biased = fr.filter(~guarded).select(*cols)
+            cand = (
+                biased.join(hop, biased.cur == F.col("a_src"))
+                .join(
+                    eset,
+                    (F.col("prev") == F.col("e_src")) & (F.col("a_dst") == F.col("e_dst")),
+                    "left",
                 )
-                - 1
-            ).cast("long"),
-        )
-        stepped = ranked.join(
-            chosen.select(
+                .select(
+                    *cols,
+                    F.col("a_dst").alias("x"),
+                    F.col("a_idx").alias("x_idx"),
+                    # class 0 = return, 1 = shared-with-prev, 2 = out
+                    F.when(F.col("a_dst") == F.col("prev"), F.lit(0))
+                    .when(F.col("e_src").isNotNull(), F.lit(1))
+                    .otherwise(F.lit(2))
+                    .alias("cls"),
+                )
+            )
+            counts = cand.groupBy("start", "walk_no", "cur").agg(
+                *[
+                    F.sum(F.when(F.col("cls") == c, 1).otherwise(0)).cast("long").alias(f"n{c}")
+                    for c in range(3)
+                ]
+            )
+            # class ranges on [0, Σweights): return [0, lo1), shared
+            # [lo1, lo2), out [lo2, Σ)
+            lo1 = F.lit(w_return) * F.col("n0")
+            lo2 = lo1 + F.lit(w_shared) * F.col("n1")
+            # prev is functionally determined by (start, walk_no, cur) at
+            # this hop — it rides back in via the distinct-projection join
+            chosen = counts.join(
+                cand.select("start", "walk_no", "cur", "prev").distinct(),
+                ["start", "walk_no", "cur"],
+            ).select(
                 F.col("start").alias("s2"),
                 F.col("walk_no").alias("w2"),
                 F.col("cur").alias("c2"),
-                "pick_cls",
-                "ordinal",
-            ),
-            (F.col("start") == F.col("s2"))
-            & (F.col("walk_no") == F.col("w2"))
-            & (F.col("cur") == F.col("c2"))
-            & (F.col("cls") == F.col("pick_cls"))
-            & (F.col("rn") == F.col("ordinal")),
-        ).select(
-            "start",
-            "walk_no",
-            F.col("x").alias("cur"),
-            F.col("cur").alias("prev"),
-            F.concat_ws(" ", F.col("path"), F.col("x")).alias("path"),
-        )
-        frontier = _first_order(
-            plain.select("start", "walk_no", "cur", "path"), t
-        ).unionByName(stepped)
-        if t % CHECKPOINT_EVERY == 0:
-            frontier = frontier.localCheckpoint(eager=True)
-    return frontier.select("start", "walk_no", "path")
+                "n0",
+                "n1",
+                F.pmod(
+                    _step_hash(t, F.col("prev")), lo2 + F.lit(w_out) * F.col("n2")
+                ).alias("h"),
+            ).select(
+                "s2",
+                "w2",
+                "c2",
+                F.when(F.col("h") < lo1, F.lit(0))
+                .when(F.col("h") < lo2, F.lit(1))
+                .otherwise(F.lit(2))
+                .alias("pick_cls"),
+                F.when(F.col("h") < lo1, F.expr(f"h DIV {w_return}"))
+                .when(F.col("h") < lo2, F.expr(f"(h - {w_return} * n0) DIV {w_shared}"))
+                .otherwise(F.expr(f"(h - {w_return} * n0 - {w_shared} * n1) DIV {w_out}"))
+                .cast("long")
+                .alias("ordinal"),
+            )
+            rank = Window.partitionBy("start", "walk_no", "cur", "cls").orderBy("x_idx")
+            stepped = (
+                cand.withColumn("rn", (F.row_number().over(rank) - 1).cast("long"))
+                .join(
+                    chosen,
+                    (F.col("start") == F.col("s2"))
+                    & (F.col("walk_no") == F.col("w2"))
+                    & (F.col("cur") == F.col("c2"))
+                    & (F.col("cls") == F.col("pick_cls"))
+                    & (F.col("rn") == F.col("ordinal")),
+                )
+                .select(
+                    "start",
+                    "walk_no",
+                    F.col("x").alias("cur"),
+                    F.col("cur").alias("prev"),
+                    F.concat_ws(" ", F.col("path"), F.col("x")).alias("path"),
+                )
+            )
+            return uniform(plain, t).unionByName(stepped)
+
+        return step
+
+    return _walk(edges, walk_len, walks_per_node, make_step)
 
 
 def weighted_walks(
@@ -448,66 +383,56 @@ def weighted_walks(
     ``weighted_walks_reference`` is the independent bisect replay;
     parity tests pin them bit-equal."""
     from pie_spark.events.rangejoin import range_join
-
-    e = edges.select(
-        F.col("src").cast("string").alias("src"),
-        F.col("dst").cast("string").alias("dst"),
-        F.col("w").cast("long").alias("w"),
-    ).filter(F.col("w") > 0)
-    # per-src cumulative intervals in dst rank order
-    ws = Window.partitionBy("src").orderBy("dst")
-    local = e.groupBy("src", "dst").agg(F.max("w").alias("w")).select(
-        "src",
-        "dst",
-        (F.sum("w").over(ws) - F.col("w")).cast("long").alias("c_lo"),
-        (F.sum("w").over(ws) - 1).cast("long").alias("c_hi"),
-    )
-    totals = local.groupBy("src").agg(
-        (F.max("c_hi") + 1).cast("long").alias("total_w")
-    )
-    # per-src global base: running sum of totals in src rank order —
-    # distributed prefix sums (pie_spark/ranks.py), no V-row
-    # single-partition window
     from pie_spark.ranks import prefix_sums
 
-    base = (
-        prefix_sums(totals, "src", "total_w")
-        .select(
-            F.col("src").alias("b_src"),
-            "total_w",
-            F.col("cum_lo").alias("base"),
+    e = (
+        edges.select(
+            F.col("src").cast("string").alias("src"),
+            F.col("dst").cast("string").alias("dst"),
+            F.col("w").cast("long").alias("w"),
         )
-        .localCheckpoint(eager=True)
+        .filter(F.col("w") > 0)
+        .groupBy("src", "dst")
+        .agg(F.max("w").alias("w"))
     )
-    ivals = (
-        local.join(base, local.src == F.col("b_src"))
-        .select(
-            F.col("dst").alias("i_dst"),
-            (F.col("base") + F.col("c_lo")).alias("g_lo"),
-            (F.col("base") + F.col("c_hi")).alias("g_hi"),
+
+    def make_step() -> Step:
+        # per-src cumulative intervals in dst rank order
+        ws = Window.partitionBy("src").orderBy("dst")
+        local = e.select(
+            "src",
+            "dst",
+            (F.sum("w").over(ws) - F.col("w")).cast("long").alias("c_lo"),
+            (F.sum("w").over(ws) - 1).cast("long").alias("c_hi"),
         )
-        .localCheckpoint(eager=True)
-    )
-    max_w = int(
-        e.agg(F.max("w").alias("m")).collect()[0]["m"] or 1
-    )  # bounded: one long
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    frontier = nodes.select(
-        F.col("node").alias("start"),
-        F.explode(
-            F.sequence(F.lit(0), F.lit(walks_per_node - 1))
-        ).alias("walk_no"),
-        F.col("node").alias("cur"),
-        F.col("node").alias("path"),
-    )
-    for t in range(1, walk_len):
-        picked = (
-            frontier.join(base, frontier.cur == F.col("b_src"), "left")
+        totals = local.groupBy("src").agg(
+            (F.max("c_hi") + 1).cast("long").alias("total_w")
+        )
+        # per-src global base: running sum of totals in src rank order —
+        # distributed prefix sums (pie_spark/ranks.py), no V-row
+        # single-partition window
+        base = (
+            prefix_sums(totals, "src", "total_w")
             .select(
+                F.col("src").alias("b_src"),
+                "total_w",
+                F.col("cum_lo").alias("base"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        ivals = (
+            local.join(base, local.src == F.col("b_src"))
+            .select(
+                F.col("dst").alias("i_dst"),
+                (F.col("base") + F.col("c_lo")).alias("g_lo"),
+                (F.col("base") + F.col("c_hi")).alias("g_hi"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        max_w = int(e.agg(F.max("w").alias("m")).collect()[0]["m"] or 1)  # one long
+
+        def step(frontier: DataFrame, t: int) -> DataFrame:
+            picked = frontier.join(base, frontier.cur == F.col("b_src"), "left").select(
                 "start",
                 "walk_no",
                 "cur",
@@ -517,23 +442,23 @@ def weighted_walks(
                     F.col("base") + F.pmod(_step_hash(t), F.col("total_w")),
                 ).alias("pick_g"),
             )
-        )
-        live = picked.filter(F.col("pick_g").isNotNull())
-        frozen = picked.filter(F.col("pick_g").isNull()).select(
-            "start", "walk_no", "cur", "path"
-        )
-        stepped = range_join(
-            live, ivals, "pick_g", "g_lo", "g_hi", bucket_us=max_w
-        ).select(
-            "start",
-            "walk_no",
-            F.col("i_dst").alias("cur"),
-            F.concat_ws(" ", F.col("path"), F.col("i_dst")).alias("path"),
-        )
-        frontier = frozen.unionByName(stepped)
-        if t % CHECKPOINT_EVERY == 0:
-            frontier = frontier.localCheckpoint(eager=True)
-    return frontier.select("start", "walk_no", "path")
+            frozen = picked.filter(F.col("pick_g").isNull()).select(
+                "start", "walk_no", "cur", "path"
+            )
+            stepped = range_join(
+                picked.filter(F.col("pick_g").isNotNull()),
+                ivals, "pick_g", "g_lo", "g_hi", bucket_us=max_w,
+            ).select(
+                "start",
+                "walk_no",
+                F.col("i_dst").alias("cur"),
+                F.concat_ws(" ", F.col("path"), F.col("i_dst")).alias("path"),
+            )
+            return frozen.unionByName(stepped)
+
+        return step
+
+    return _walk(e, walk_len, walks_per_node, make_step)
 
 
 def weighted_walks_reference(
@@ -573,7 +498,7 @@ def weighted_walks_reference(
                 if cur not in cum:
                     continue
                 ds, his, total = cum[cur]
-                h = _h64_py(f"{start}#{walk_no}#{t}#{cur}") % total
+                h = h64_py(f"{start}#{walk_no}#{t}#{cur}") % total
                 cur = ds[bisect_right(his, h - 1)]
                 path.append(cur)
             out.append((start, walk_no, " ".join(path)))
@@ -607,7 +532,7 @@ def node2vec_walks_reference(
                 if not ns:
                     continue
                 if prev is None or len(ns) > max_bias_degree:
-                    pick = _h64_py(f"{start}#{walk_no}#{t}#{cur}") % len(ns)
+                    pick = h64_py(f"{start}#{walk_no}#{t}#{cur}") % len(ns)
                     nxt = ns[pick]
                 else:
                     classed = [
@@ -617,7 +542,7 @@ def node2vec_walks_reference(
                     ]
                     weights = {0: w_return, 1: w_shared, 2: w_out}
                     total = sum(weights[c] for c in classed)
-                    h = _h64_py(f"{start}#{walk_no}#{t}#{cur}#{prev}") % total
+                    h = h64_py(f"{start}#{walk_no}#{t}#{cur}#{prev}") % total
                     n = [classed.count(0), classed.count(1), classed.count(2)]
                     if h < w_return * n[0]:
                         cls, ordinal = 0, h // w_return
@@ -633,10 +558,6 @@ def node2vec_walks_reference(
                 path.append(cur)
             out.append((start, walk_no, " ".join(path)))
     return out
-
-
-def _h64_py(s: str) -> int:
-    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
 def random_walks_reference(
@@ -663,7 +584,7 @@ def random_walks_reference(
                 ns = nbrs.get(cur)
                 if not ns:
                     continue
-                pick = _h64_py(f"{start}#{walk_no}#{t}#{cur}") % len(ns)
+                pick = h64_py(f"{start}#{walk_no}#{t}#{cur}") % len(ns)
                 cur = ns[pick]
                 path.append(cur)
             out.append((start, walk_no, " ".join(path)))

@@ -39,7 +39,7 @@ Accuracy: standard HLL, relative error ≈ 1.04/√m (m = 2^p).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 W_HEX = 13  # 52-bit w -> rho in 1..53, 2^(53-M) always fits a long
@@ -63,21 +63,28 @@ def scale_constant(p: int) -> float:
     return _alpha(m) * m * m * float(1 << 53)
 
 
-def hll_registers(df: DataFrame, col: str, p: int = 8) -> DataFrame:
-    """(bucket, M) — one row per NON-empty register; at most m = 2^p
-    rows leave the partial aggregation regardless of input size."""
+def bucket_rho(col: Column, p: int) -> tuple[Column, Column]:
+    """(bucket, rho) of one value: bucket = first p/4 hex chars of its
+    sha256, rho = 53 − bitlen(next 13 hex chars), 53 at zero."""
     if p not in (4, 8):
         # p nibble-aligned keeps bucket = hex prefix; p <= 10 keeps the
         # exact scaled register sum (max m * 2^52) inside BIGINT on both
         # engines (the driver's pandas hasher is dtype-exact for int64,
         # while DECIMAL crosses engines as object/float inconsistently)
         raise ValueError("p must be 4 or 8 (hex-nibble bucket, BIGINT-exact sum)")
-    hx = F.sha2(F.col(col).cast("string"), 256)
+    hx = F.sha2(col.cast("string"), 256)
     bucket = F.conv(F.substring(hx, 1, p // 4), 16, 10).cast("long")
     w = F.conv(F.substring(hx, p // 4 + 1, W_HEX), 16, 10).cast("long")
     rho = F.when(w == 0, F.lit(53)).otherwise(
         F.lit(53) - F.length(F.conv(w.cast("string"), 10, 2))
     )
+    return bucket, rho
+
+
+def hll_registers(df: DataFrame, col: str, p: int = 8) -> DataFrame:
+    """(bucket, M) — one row per NON-empty register; at most m = 2^p
+    rows leave the partial aggregation regardless of input size."""
+    bucket, rho = bucket_rho(F.col(col), p)
     return (
         df.select(bucket.alias("bucket"), rho.alias("rho"))
         .groupBy("bucket")

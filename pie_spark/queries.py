@@ -3212,17 +3212,15 @@ def _lloyd_replay_centroids(path: str, k: int, iters: int) -> dict[str, list[flo
     to train_kmeans by construction — that equality is itself pinned by
     tests/test_ann.py, so inlining these values into the oracle SQL
     makes the driver row check the whole chain."""
-    import hashlib
     import math
+
+    from pie_spark.dedup.shingles import h64_py
 
     rows = _duck_rows(
         f"SELECT CAST(vec_id AS VARCHAR), embedding::DOUBLE[] "
         f"FROM read_parquet('{path}')"
     )
     vecs = {r[0]: [float(x) for x in r[1]] for r in rows}
-
-    def h64(s: str) -> int:
-        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
     def dot(a, b):
         acc = 0.0
@@ -3236,7 +3234,7 @@ def _lloyd_replay_centroids(path: str, k: int, iters: int) -> dict[str, list[flo
     def rhu(x):  # round-half-up (Spark/DuckDB round), not banker's
         return math.floor(x + 0.5) if x >= 0 else math.ceil(x - 0.5)
 
-    seeds = sorted(vecs, key=lambda i: (h64(i), i))[:k]
+    seeds = sorted(vecs, key=lambda i: (h64_py(i), i))[:k]
     cents = {i: list(vecs[i]) for i in seeds}
     for _ in range(iters):
         members: dict[str, list[list[float]]] = {}

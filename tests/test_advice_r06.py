@@ -1,11 +1,12 @@
 """Correctness fixes from ADVICE.md (r06 advisor), pinned:
 
-1. node2vec_walks at walk_len <= 1 returns bare start nodes (reference
-   parity at the degenerate parameter).
+1. every walker at walk_len <= 1 returns bare start nodes (reference
+   parity at the degenerate parameter), and walks_per_node < 1 raises.
 2. sssp_distances raises instead of silently returning non-converged
    distances when max_rounds is exhausted.
-3. negatives: the packed min-election guard fails fast, and the vocab
-   broadcast hint is dropped past BROADCAST_MAX_ENTS.
+3. negatives: the packed min-election guard fails fast, n_neg or
+   probes < 1 raises, and the vocab broadcast hint is dropped past
+   BROADCAST_MAX_ENTS.
 """
 
 from __future__ import annotations
@@ -20,19 +21,55 @@ from pyspark.sql import functions as F
 EDGES = [("a", "b"), ("b", "c"), ("b", "d"), ("c", "a")]
 
 
-@pytest.mark.parametrize("walk_len", [0, 1, 2])
-def test_node2vec_degenerate_walk_len_matches_reference(spark, walk_len):
-    from pie_spark.graph.walks import node2vec_walks, node2vec_walks_reference
+def _walker(kind):
+    """(spark walker, its reference, its edge rows, its schema) — the
+    weighted walker gets the same graph with unit weights."""
+    from pie_spark.graph import walks as W
 
-    e = spark.createDataFrame(EDGES, "src string, dst string")
+    pairs, weighted = "src string, dst string", [(s, d, 1) for s, d in EDGES]
+    return {
+        "random": (W.random_walks, W.random_walks_reference, EDGES, pairs),
+        "node2vec": (W.node2vec_walks, W.node2vec_walks_reference, EDGES, pairs),
+        "weighted": (W.weighted_walks, W.weighted_walks_reference, weighted, pairs + ", w long"),
+    }[kind]
+
+
+@pytest.mark.parametrize("walk_len", [0, 1, 2])
+@pytest.mark.parametrize("kind", ["random", "node2vec", "weighted"])
+def test_degenerate_walk_len_matches_reference(spark, kind, walk_len):
+    walks, reference, rows, schema = _walker(kind)
+    e = spark.createDataFrame(rows, schema)
     got = sorted(
-        (r.start, r.walk_no, r.path)
-        for r in node2vec_walks(e, walk_len=walk_len).collect()
+        (r.start, r.walk_no, r.path) for r in walks(e, walk_len=walk_len).collect()
     )
-    want = sorted(node2vec_walks_reference(EDGES, walk_len=walk_len))
+    want = sorted(reference(rows, walk_len=walk_len))
     assert got == want
     if walk_len <= 1:
         assert all(" " not in p for _, _, p in got)  # bare start nodes
+
+
+@pytest.mark.parametrize("kind", ["random", "node2vec", "weighted"])
+def test_zero_walks_per_node_rejected(spark, kind):
+    # F.sequence(0, -1) counts down: without the guard every node got
+    # walks 0 and -1 where the reference yields none
+    walks, _, rows, schema = _walker(kind)
+    e = spark.createDataFrame(rows, schema)
+    with pytest.raises(ValueError, match="walks_per_node"):
+        walks(e, walks_per_node=0)
+
+
+@pytest.mark.parametrize("kw", [{"n_neg": 0}, {"probes": 0}], ids=["n_neg", "probes"])
+def test_zero_negative_counts_rejected(spark, kw):
+    from pie_spark.graph import negatives as N
+
+    t = spark.createDataFrame(
+        [("a", "p", "b"), ("b", "p", "c")], "subj string, pred string, obj string"
+    )
+    w = spark.createDataFrame([("a", 1), ("b", 2), ("c", 3)], "entity string, w long")
+    with pytest.raises(ValueError, match="must both be >= 1"):
+        N.transe_negatives(t, **kw)
+    with pytest.raises(ValueError, match="must both be >= 1"):
+        N.weighted_negatives(t, w, **kw)
 
 
 def test_sssp_raises_when_rounds_exhausted(spark):

@@ -280,3 +280,14 @@ def test_minhash_delta_standing_tables_not_shuffled(spark, tmp_path):
     # side of a shuffle join
     assert "Exchange hashpartitioning" not in plan
     assert "BroadcastHashJoin" in plan
+
+
+def test_h64_py_matches_spark_h64(spark):
+    """The Python twin the reference replays use is bit-identical to the
+    Spark column hash, non-ASCII included."""
+    from pie_spark.dedup.shingles import h64, h64_py
+
+    vals = ["", "a", "n01#0#3#n07#n02", "O'Brien", "Ǆ ı σ 東京 🙂"]
+    df = spark.createDataFrame([(v,) for v in vals], "s string")
+    got = {r.s: r.h for r in df.select("s", h64(F.col("s")).alias("h")).collect()}
+    assert got == {v: h64_py(v) for v in vals}

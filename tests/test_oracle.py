@@ -252,9 +252,10 @@ def test_registry_under_driver_cap():
     "name,fn,sql", SQL_CHECKED + FOLDED, ids=[n for n, *_ in SQL_CHECKED + FOLDED]
 )
 def test_oracle_parity(spark, ddb, name, fn, sql):
+    # query first: a lazy oracle replays the sf dir its query last ran on
+    got = fn(spark, SF_DIR_01).toPandas()
     if callable(sql):  # lazily-built oracle (e.g. trained-IVF replay)
         sql = sql()
-    got = fn(spark, SF_DIR_01).toPandas()
     want = ddb.execute(sql).fetchdf()
     assert sorted(got.columns) == sorted(want.columns), (
         f"{name}: column mismatch {sorted(got.columns)} vs {sorted(want.columns)}"
@@ -291,8 +292,7 @@ def test_replay_oracle_reads_the_dir_its_query_ran_on(spark, monkeypatch):
 
     from .conftest import SF_DIR_001
 
-    # restore the record at teardown: other lazy oracles in this module
-    # are built before their query runs
+    # restore the record at teardown so later tests see it unchanged
     monkeypatch.setitem(q._ORACLE_SF, "kcore", None)
     monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF", SF_DIR_01)
     default = sorted(duckdb.sql(q._kcore_nodes_sql()).fetchall())
