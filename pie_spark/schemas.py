@@ -53,6 +53,19 @@ TRIPLE_SCHEMA = T.StructType(
     ]
 )
 
+# event log rows (the events.parquet layout): the landing-zone input of
+# streaming sessionization and rollup
+EVENT_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)
+
 GOLDEN_MENTION_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),

@@ -14,10 +14,8 @@ per distinct surface key — state store partitioned by key hash, so hot
 keys shard like any keyed state, and the per-group pandas function
 receives Arrow batches (no per-row Python).
 
-Sink: update-mode output lands via per-epoch overwrite directories
-(same idempotent exactly-once recipe as ingest.py); the current
-count for a key = the row from the LATEST epoch that mentions it —
-latest_counts() resolves that with one max-epoch window.
+Sink: drain.py's per-epoch overwrite dirs; a key's current count is
+its row from the LATEST epoch that mentions it (latest_counts).
 """
 
 from __future__ import annotations
@@ -34,6 +32,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from pie_spark.streaming.drain import drain, epoch_sink, latest_per_key, read_stream
 
 COUNT_SCHEMA = StructType(
     [
@@ -69,22 +69,20 @@ def stream_surface_counts(
     mentions_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 0,
+    max_files_per_trigger: int | None = None,
 ) -> None:
     """Drain newly-landed mention files (the ingest stage's
     ``batch-*`` dirs), accumulating per-surface totals in keyed state;
     state persists in the streaming checkpoint across drains.
-    ``max_files_per_trigger`` > 0 bounds each micro-batch (and, in
+    ``max_files_per_trigger`` bounds each micro-batch (and, in
     tests/driver queries, forces MULTIPLE micro-batches so the
     cross-batch state accumulation is actually exercised)."""
     from pie_spark.extract.normalize import norm_key
 
     from pie_spark.schemas import MENTION_SCHEMA
 
-    reader = spark.readStream.schema(MENTION_SCHEMA)
-    if max_files_per_trigger > 0:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(os.path.join(mentions_dir, "batch-*"))
+    mentions = os.path.join(mentions_dir, "batch-*")
+    stream = read_stream(spark, MENTION_SCHEMA, mentions, max_files_per_trigger)
     keyed = stream.filter(F.col("mention_type") == "PERSON").select(
         norm_key(F.col("surface")).alias("norm_key")
     )
@@ -96,20 +94,7 @@ def stream_surface_counts(
         outputMode="update",
         timeoutConf="NoTimeout",
     )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(output_dir, f"epoch-{epoch_id:06d}")
-        )
-
-    q = (
-        counts.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(counts, checkpoint_dir, epoch_sink(output_dir))
 
 
 def hot_keys_from_counts(spark: SparkSession, output_dir: str, k: int) -> list[str]:
@@ -131,19 +116,6 @@ def hot_keys_from_counts(spark: SparkSession, output_dir: str, k: int) -> list[s
 def latest_counts(spark: SparkSession, output_dir: str) -> DataFrame:
     """(norm_key, mentions_total): each key's most recent running total
     across all committed epochs."""
-    all_rows = spark.read.option("pathGlobFilter", "*.parquet").parquet(
-        os.path.join(output_dir, "epoch-*")
-    )
-    files = all_rows.withColumn("__f", F.input_file_name())
-    epoch = F.regexp_extract("__f", r"epoch-(\d+)", 1).cast("long")
-    w = files.withColumn("__e", epoch)
-    from pyspark.sql import Window
-
-    rn = F.row_number().over(
-        Window.partitionBy("norm_key").orderBy(F.desc("__e"))
-    )
-    return (
-        w.withColumn("__rn", rn)
-        .filter(F.col("__rn") == 1)
-        .select("norm_key", "mentions_total")
+    return latest_per_key(spark, output_dir, ["norm_key"]).select(
+        "norm_key", "mentions_total"
     )

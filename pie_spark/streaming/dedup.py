@@ -25,12 +25,15 @@ keyed state.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import os
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pie_spark.dedup.exact import _content_key
 from pie_spark.schemas import DOC_SCHEMA
+from pie_spark.streaming.drain import drain, read_stream
 
 # landing-zone schema for the bounded-state mode: the plain DOC_SCHEMA
 # plus the producer's ingestion timestamp (re-crawl landing zones carry
@@ -38,6 +41,13 @@ from pie_spark.schemas import DOC_SCHEMA
 DOC_EVENT_SCHEMA = T.StructType(
     [*DOC_SCHEMA.fields, T.StructField("event_time", T.TimestampType(), False)]
 )
+
+
+def _span_text() -> Column:
+    """Column ``text``: a document's span texts joined by spaces (null → "")."""
+    return F.concat_ws(
+        " ", F.transform("spans", lambda sp: F.coalesce(sp["text"], F.lit("")))
+    ).alias("text")
 
 
 def streaming_dedup_docs(
@@ -54,18 +64,11 @@ def streaming_dedup_docs(
     and the input files must carry an ``event_time`` timestamp column
     (read via :data:`DOC_EVENT_SCHEMA`; the output keeps it)."""
     schema = DOC_SCHEMA if within_watermark is None else DOC_EVENT_SCHEMA
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-
+    stream = read_stream(spark, schema, input_dir, max_files_per_trigger)
     flat = stream.select(
         "doc_id",
         *(["event_time"] if within_watermark is not None else []),
-        F.concat_ws(
-            " ",
-            F.transform("spans", lambda sp: F.coalesce(sp["text"], F.lit(""))),
-        ).alias("text"),
+        _span_text(),
     ).withColumn("content_md5", _content_key("text"))
 
     if within_watermark is not None:
@@ -74,16 +77,7 @@ def streaming_dedup_docs(
         ).dropDuplicatesWithinWatermark(["content_md5"])
     else:
         deduped = flat.dropDuplicates(["content_md5"])
-
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(deduped, checkpoint_dir, file_sink_dir=output_dir)
 
 
 def stream_neardup_index(
@@ -121,30 +115,13 @@ def stream_neardup_index(
     (``table.scan``), so concurrent readers and the in-flight epoch
     never race; the first epoch bootstraps typed empty index frames
     from the batch itself (``limit(0)``)."""
-    import os
-
     from pie_spark.dedup.incremental import build_index, delta_near_duplicates
-    from pie_spark.schemas import DOC_SCHEMA
-
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    n_batches = 0
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        nonlocal n_batches
-        n_batches += 1
         key = f"epoch-{epoch_id}"
         if table.applied("pairs", key):
             return  # committed epoch replayed after a crash: full skip
-        docs = batch_df.select(
-            "doc_id",
-            F.concat_ws(
-                " ",
-                F.transform("spans", lambda sp: F.coalesce(sp["text"], F.lit(""))),
-            ).alias("text"),
-        )
+        docs = batch_df.select("doc_id", _span_text())
         if table.current_snapshot() is None:
             old_sigs, old_bk = build_index(docs.limit(0))
         else:
@@ -164,11 +141,5 @@ def stream_neardup_index(
             out[name] = path
         table.add_files_many(out, meta={"epoch": epoch_id}, key=key)
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches
+    stream = read_stream(spark, DOC_SCHEMA, input_dir, max_files_per_trigger)
+    return drain(stream, checkpoint_dir, process)

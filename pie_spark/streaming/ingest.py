@@ -10,18 +10,12 @@ the UNCHANGED batch ``extract_stage`` inside ``foreachBatch`` keeps
 stream/batch parity exact by construction (same code object), which is
 what lets the resume test assert stream output ≡ batch output.
 
-Exactly-once: the file source tracks consumed files in the streaming
-checkpoint (offset log); each micro-batch is written to its OWN
-directory ``batch-<epoch_id>`` with ``mode("overwrite")`` — a retried
-epoch overwrites the same directory instead of appending duplicates,
-giving idempotent commits (the standard foreachBatch exactly-once
-recipe). Extraction is stateless per document, so no watermark is
-needed; a restarted stream processes exactly the not-yet-committed
-files.
-
-At cluster scale the input is an Iceberg/parquet landing zone written
-by upstream producers; ``maxFilesPerTrigger`` bounds micro-batch size
-so executor memory stays flat regardless of backlog depth.
+Exactly-once: the drain.py protocol — the offset log skips committed
+files, and each micro-batch is written to its OWN directory
+``batch-<epoch_id>`` with ``mode("overwrite")``, so a retried epoch
+overwrites the same directory instead of appending duplicates.
+Extraction is stateless per document, so no watermark is needed; a
+restarted stream processes exactly the not-yet-committed files.
 """
 
 from __future__ import annotations
@@ -32,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pie_spark.config import PipelineConfig
 from pie_spark.schemas import DOC_SCHEMA
+from pie_spark.streaming.drain import drain, read_stream
 
 
 def stream_extract_mentions(
@@ -59,23 +54,14 @@ def stream_extract_mentions(
     — the table becomes the queryable system of record for the landing
     zone, with time travel per micro-batch. ``maintain_every`` > 0 runs
     one table-maintenance pass (compact-if-over-``maintain_max_files``
-    + expire + orphan sweep) every that-many batches, INSIDE the sink —
+    + expire + orphan sweep) every that-many epochs, INSIDE the sink —
     sequential with epochs, so maintenance never races its own writer.
     This is the full 10^12-doc landing-zone loop: append per
     micro-batch, fold small files, expire history, all while readers
     see only committed snapshots."""
     from pie_spark.pipeline import extract_stage
 
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-
-    n_batches = 0
-
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        nonlocal n_batches
-        n_batches += 1
         out = os.path.join(output_dir, f"batch-{epoch_id:06d}")
         # overwrite per-epoch directory = idempotent on retry
         mentions, _ = extract_stage(spark, cfg, batch_df, dict_df)
@@ -84,7 +70,7 @@ def stream_extract_mentions(
             snapshot_table.add_files(
                 "mentions", out, meta={"epoch": epoch_id}, key=f"epoch-{epoch_id}"
             )
-            if maintain_every > 0 and n_batches % maintain_every == 0:
+            if maintain_every > 0 and (epoch_id + 1) % maintain_every == 0:
                 snapshot_table.maintain(
                     spark,
                     "mentions",
@@ -92,14 +78,8 @@ def stream_extract_mentions(
                     orphan_age_sec=3600.0,
                 )
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches
+    stream = read_stream(spark, DOC_SCHEMA, input_dir, max_files_per_trigger)
+    return drain(stream, checkpoint_dir, process)
 
 
 def read_streamed_mentions(spark: SparkSession, output_dir: str) -> DataFrame:

@@ -5,7 +5,7 @@ and coarser levels derive from it on demand.
 
 Per micro-batch: aggregate THAT BATCH's events to finest-level bucket
 partials (the raw rows never leave the batch) and land them in a
-per-epoch overwrite dir — the counters.py idempotent exactly-once
+per-epoch overwrite dir — the drain.py idempotent exactly-once
 recipe (a replayed epoch overwrites itself byte-identically).
 ``combined_rollup`` then merges all epochs' partials with ONE
 bucket-level aggregation — legal because every aggregate is algebraic
@@ -24,10 +24,11 @@ cascade level.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from pie_spark.schemas import EVENT_SCHEMA
+from pie_spark.streaming.drain import drain, epoch_sink, read_epochs, read_stream
 
 
 def stream_rollup(
@@ -37,38 +38,23 @@ def stream_rollup(
     checkpoint_dir: str,
     width_us: int,
     keys: list[str] | None = None,
-    max_files_per_trigger: int = 0,
+    max_files_per_trigger: int | None = None,
 ) -> None:
     """Drain newly-landed event parquet files into per-epoch finest-
     level bucket partials (epoch overwrite dirs, idempotent)."""
     from pie_spark.events.rollup import bucket_events
 
     keys = keys or []
-    reader = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    if max_files_per_trigger > 0:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(events_dir).select(
+    stream = read_stream(spark, EVENT_SCHEMA, events_dir, max_files_per_trigger)
+    stream = stream.select(
         *keys,
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
         F.expr("CAST(round(value * 100) AS BIGINT)").alias("value_centi"),
     )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        partial = bucket_events(batch_df, width_us, "ts_us", keys)
-        partial.write.mode("overwrite").parquet(
-            os.path.join(output_dir, f"epoch-{epoch_id:06d}")
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    partials = epoch_sink(
+        output_dir, lambda batch: bucket_events(batch, width_us, "ts_us", keys)
     )
-    q.awaitTermination()
+    drain(stream, checkpoint_dir, partials)
 
 
 def combined_rollup(
@@ -80,10 +66,7 @@ def combined_rollup(
     (pinned in tests), and a valid input to ``_coarsen`` for the
     coarser cascade levels."""
     keys = keys or []
-    rows = spark.read.option("pathGlobFilter", "*.parquet").parquet(
-        os.path.join(output_dir, "epoch-*")
-    )
-    return rows.groupBy(*keys, "bucket_us").agg(
+    return read_epochs(spark, output_dir).groupBy(*keys, "bucket_us").agg(
         F.sum("n_events").cast("long").alias("n_events"),
         F.sum("value_centi").cast("long").alias("value_centi"),
         F.min("min_ts_us").alias("min_ts_us"),
@@ -97,11 +80,11 @@ def stream_hdr_sketch(
     output_dir: str,
     checkpoint_dir: str,
     p: int = 6,
-    max_files_per_trigger: int = 0,
+    max_files_per_trigger: int | None = None,
 ) -> None:
     """Streaming continuous QUANTILE aggregate: per micro-batch, the
     X26 log-histogram sketch of that batch's document lengths lands as
-    an epoch-overwrite partial (the counters.py exactly-once recipe);
+    an epoch-overwrite partial (the drain.py exactly-once recipe);
     because sketch merge is exact bucket-sum (eval/quantiles.py —
     pinned merge(halves) ≡ sketch(whole)), the union of epoch partials
     IS the corpus sketch, so stream ≡ batch with NO keyed state store
@@ -109,37 +92,18 @@ def stream_hdr_sketch(
     quantile read (`hdr_quantiles`) runs on `combined_hdr_sketch` at
     any time — a standing landing zone gets always-current length
     quantiles for the cost of a bucket-level merge."""
-    reader = spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    if max_files_per_trigger > 0:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_dir).select(
-        F.length("text").cast("long").alias("v")
-    )
+    from pie_spark.eval.quantiles import hdr_sketch
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        from pie_spark.eval.quantiles import hdr_sketch
-
-        hdr_sketch(batch_df, "v", p=p).write.mode("overwrite").parquet(
-            os.path.join(output_dir, f"epoch-{epoch_id:06d}")
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    docs = "doc_id long, text string, lang string, source string, n_chars long"
+    stream = read_stream(spark, docs, docs_dir, max_files_per_trigger)
+    stream = stream.select(F.length("text").cast("long").alias("v"))
+    sketches = epoch_sink(output_dir, lambda batch: hdr_sketch(batch, "v", p=p))
+    drain(stream, checkpoint_dir, sketches)
 
 
 def combined_hdr_sketch(spark: SparkSession, output_dir: str) -> DataFrame:
     """Bucket-sum merge of every epoch's sketch partials — feed to
     ``pie_spark.eval.quantiles.hdr_quantiles``."""
-    rows = spark.read.option("pathGlobFilter", "*.parquet").parquet(
-        os.path.join(output_dir, "epoch-*")
-    )
-    return rows.groupBy("bucket", "lo", "hi").agg(
+    return read_epochs(spark, output_dir).groupBy("bucket", "lo", "hi").agg(
         F.sum("n").cast("long").alias("n")
     )

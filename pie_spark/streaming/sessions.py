@@ -15,10 +15,10 @@ fold events into the open session, CLOSING it whenever a gap exceeds
 ``gap_sec`` (strictly greater — the exact batch rule). Every session
 TOUCHED this batch is emitted: closed sessions are final; the still-
 open session is emitted provisionally and superseded by a later epoch
-(latest-epoch-wins, resolved by :func:`latest_sessions` — the same
-per-epoch overwrite-dir + max-epoch-window recipe as counters.py, so
-replayed epochs stay idempotent and a crash between write and commit
-re-emits identical rows).
+(latest-epoch-wins, resolved by :func:`latest_sessions` — drain.py's
+per-epoch overwrite dirs + latest-epoch-per-key read, so replayed
+epochs stay idempotent and a crash between write and commit re-emits
+identical rows).
 
 Parity contract (pinned stream ≡ batch in tests/test_sessions.py):
 after any full drain, ``latest_sessions()`` equals
@@ -35,13 +35,15 @@ streaming/dedup.py).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
+
+from pie_spark.schemas import EVENT_SCHEMA
+from pie_spark.streaming.drain import drain, epoch_sink, latest_per_key, read_stream
 
 SESSION_SCHEMA = StructType(
     [
@@ -113,18 +115,12 @@ def stream_sessions(
     output_dir: str,
     checkpoint_dir: str,
     gap_sec: int,
-    max_files_per_trigger: int = 0,
+    max_files_per_trigger: int | None = None,
 ) -> None:
     """Drain newly-landed event parquet files, maintaining per-user
     open-session state across micro-batches; per-epoch overwrite dirs
     make replays idempotent (exactly-once via latest-epoch-wins)."""
-    reader = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    if max_files_per_trigger > 0:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(events_dir)
+    stream = read_stream(spark, EVENT_SCHEMA, events_dir, max_files_per_trigger)
     # identical pre-quantization to the batch twin: integer micros,
     # centi-units floated once per row (events/sessions.py discipline)
     keyed = stream.select(
@@ -144,20 +140,7 @@ def stream_sessions(
         outputMode="update",
         timeoutConf="NoTimeout",
     )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(output_dir, f"epoch-{epoch_id:06d}")
-        )
-
-    q = (
-        sessions.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(sessions, checkpoint_dir, epoch_sink(output_dir))
 
 
 def latest_sessions(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -165,18 +148,4 @@ def latest_sessions(spark: SparkSession, output_dir: str) -> DataFrame:
     epochs — closed sessions are stable, the open session's row is its
     latest provisional aggregate. After a full in-order drain this is
     value-identical to the batch twin's ``session_stats``."""
-    from pyspark.sql import Window
-
-    rows = spark.read.option("pathGlobFilter", "*.parquet").parquet(
-        os.path.join(output_dir, "epoch-*")
-    )
-    epoch = F.regexp_extract(F.input_file_name(), r"epoch-(\d+)", 1).cast("long")
-    rn = F.row_number().over(
-        Window.partitionBy("user_id", "session_idx").orderBy(F.desc("__e"))
-    )
-    return (
-        rows.withColumn("__e", epoch)
-        .withColumn("__rn", rn)
-        .filter(F.col("__rn") == 1)
-        .drop("__e", "__rn")
-    )
+    return latest_per_key(spark, output_dir, ["user_id", "session_idx"])

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pie_spark.events.sessions import session_stats, sessionize
+from pie_spark.schemas import EVENT_SCHEMA
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
@@ -17,8 +18,6 @@ T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 def _ev(i, user, sec, typ="view", val=1.0):
     return (i, T0 + dt.timedelta(seconds=sec), user, typ, val, "{}")
 
-
-SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 
 # user 1: events at 0s, 10s, 700s, 705s → sessions {0,10} and {700,705}
 # user 2: events at 0s, 600s (exactly gap=600 → SAME session), 1201s (new)
@@ -34,7 +33,7 @@ ROWS = [
 
 
 def _events(spark, parts=4):
-    return spark.createDataFrame(ROWS, SCHEMA).repartition(parts)
+    return spark.createDataFrame(ROWS, EVENT_SCHEMA).repartition(parts)
 
 
 def test_planted_sessions(spark):
@@ -54,7 +53,7 @@ def test_planted_sessions(spark):
 def test_tie_break_on_event_id(spark):
     # two events with IDENTICAL ts: session numbering still total-ordered
     rows = [_ev(10, 7, 0), _ev(11, 7, 0), _ev(12, 7, 9999)]
-    df = spark.createDataFrame(rows, SCHEMA)
+    df = spark.createDataFrame(rows, EVENT_SCHEMA)
     s = sessionize(df, gap_sec=600).select("event_id", "session_idx").collect()
     assert {(r.event_id, r.session_idx) for r in s} == {(10, 1), (11, 1), (12, 2)}
 
@@ -95,7 +94,7 @@ def _write_chunks(spark, tmp):
     chunks = [ROWS[:3], ROWS[3:5], ROWS[5:]]
     d = os.path.join(tmp, "events")
     for i, rows in enumerate(chunks):
-        spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode(
+        spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(d, f"chunk-{i:03d}"))
     return os.path.join(d, "chunk-*")

@@ -3,6 +3,9 @@ extraction, with checkpointed offset tracking across restarts."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from pie_spark.config import PipelineConfig
@@ -40,6 +43,7 @@ def test_stream_equals_batch_and_resumes(spark, tmp_path):
 
     # stream "restarts": nothing new → no duplicate reprocessing
     n_idle = stream_extract_mentions(spark, cfg, in_dir, d, out_dir, ckpt)
+    assert n_idle == 0
     assert _mention_set(read_streamed_mentions(spark, out_dir)) == got1
 
     # more files land → only the delta is processed; union ≡ full batch
@@ -48,6 +52,64 @@ def test_stream_equals_batch_and_resumes(spark, tmp_path):
     got_all = _mention_set(read_streamed_mentions(spark, out_dir))
     assert got_all == _mention_set(extract_stage(spark, cfg, docs, d)[0])
     assert got_all > got1
+
+
+def _drivers():
+    from pie_spark.streaming import counters, dedup, ingest, rollup, sessions
+
+    return {
+        "surface_counts": lambda s, d, n: counters.stream_surface_counts(
+            s, d, d + "/out", d + "/ckpt", max_files_per_trigger=n
+        ),
+        "dedup_docs": lambda s, d, n: dedup.streaming_dedup_docs(
+            s, d, d + "/out", d + "/ckpt", max_files_per_trigger=n
+        ),
+        "neardup_index": lambda s, d, n: dedup.stream_neardup_index(
+            s, d, d + "/out", d + "/ckpt", None, max_files_per_trigger=n
+        ),
+        "extract_mentions": lambda s, d, n: ingest.stream_extract_mentions(
+            s, PipelineConfig(), d, None, d + "/out", d + "/ckpt",
+            max_files_per_trigger=n,
+        ),
+        "rollup": lambda s, d, n: rollup.stream_rollup(
+            s, d, d + "/out", d + "/ckpt", width_us=1, max_files_per_trigger=n
+        ),
+        "hdr_sketch": lambda s, d, n: rollup.stream_hdr_sketch(
+            s, d, d + "/out", d + "/ckpt", max_files_per_trigger=n
+        ),
+        "sessions": lambda s, d, n: sessions.stream_sessions(
+            s, d, d + "/out", d + "/ckpt", gap_sec=600, max_files_per_trigger=n
+        ),
+    }
+
+
+@pytest.mark.parametrize("n", [0, -1])
+@pytest.mark.parametrize(
+    "driver",
+    ["surface_counts", "dedup_docs", "neardup_index", "extract_mentions",
+     "rollup", "hdr_sketch", "sessions"],
+)
+def test_max_files_per_trigger_below_one_rejected(spark, tmp_path, driver, n):
+    """One rule for every driver: None drains unbounded, a bound below 1
+    raises ValueError before any query starts (no checkpoint written)."""
+    d = str(tmp_path)
+    with pytest.raises(ValueError, match="max_files_per_trigger"):
+        _drivers()[driver](spark, d, n)
+    assert not os.path.exists(d + "/ckpt")
+
+
+def test_latest_per_key_takes_each_keys_latest_epoch(spark, tmp_path):
+    """Key A lands in epochs 0 and 2, key B only in epoch 1: A's row
+    comes from epoch 2, B's from epoch 1, and the epoch column is gone."""
+    from pie_spark.streaming.drain import latest_per_key
+
+    for epoch, rows in ((0, [("A", 0)]), (1, [("B", 1)]), (2, [("A", 2)])):
+        spark.createDataFrame(rows, "k string, v long").write.parquet(
+            str(tmp_path / f"epoch-{epoch:06d}")
+        )
+    got = latest_per_key(spark, str(tmp_path), ["k"])
+    assert got.columns == ["k", "v"]
+    assert sorted(tuple(r) for r in got.collect()) == [("A", 2), ("B", 1)]
 
 
 def test_streaming_dedup_state_across_batches(spark, tmp_path):
